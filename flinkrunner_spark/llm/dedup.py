@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.util.memo import memo
 
 MINHASH_K = 8  # minhash permutations
 LSH_BANDS = 4  # bands of 2 rows each
@@ -84,46 +85,6 @@ def band_hashes(k: int = MINHASH_K, bands: int = LSH_BANDS) -> Column:
     )
 
 
-# (applicationId, sf_dir) -> persisted signature+shingle frame. Memoized
-# here (rather than leaning on Spark's plan-keyed cache manager) so the
-# lifecycle is explicit: release_caches() unpersists, and entries from
-# stopped applications are evicted on the next access. A long-lived
-# service sweeping many sf_dirs should call release_caches(sf_dir=...)
-# after each corpus, or release_caches() between jobs.
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_stale(spark: SparkSession) -> None:
-    """Drop cache entries whose owning application is no longer current.
-
-    Entries keyed by another applicationId belong to a stopped session in
-    this process (their RDDs died with the context); holding the frames
-    would leak driver memory across session restarts in tests/services."""
-    app = spark.sparkContext.applicationId
-    for cache in (_SIG_CACHE, _CLUSTER_CACHE):
-        for key in [k for k in cache if k[0] != app]:
-            del cache[key]
-
-
-def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist signature frames and evict memoized cluster frames.
-
-    ``sf_dir=None`` releases everything; otherwise only that corpus.
-    Cluster frames are localCheckpoint-backed — their blocks are freed
-    eagerly rather than waiting on the JVM ContextCleaner."""
-    from flinkrunner_spark.operators.graph import _free_checkpoint
-
-    for key in [k for k in _SIG_CACHE if sf_dir is None or k[1] == sf_dir]:
-        try:
-            _SIG_CACHE[key].unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
-        del _SIG_CACHE[key]
-    for key in [k for k in _CLUSTER_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _free_checkpoint(_CLUSTER_CACHE[key])
-        del _CLUSTER_CACHE[key]
-
-
 def _sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc minhash signature AND distinct shingle set, one scan.
 
@@ -139,38 +100,35 @@ def _sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The frame is persisted (deserialized, spill-to-disk): it is corpus-
     sized but text-free, so docs_minhash_lsh / docs_ngram_jaccard /
     docs_dup_clusters / docs_pipeline in one session all share a single
-    materialization per sf_dir (memoized in ``_SIG_CACHE``; call
+    materialization per sf_dir (memoized in ``util.memo``; call its
     ``release_caches`` to unpersist when done with an sf_dir). At 100 TB
     the same persist call spills cleanly; recompute-instead-of-cache only
     pays if the cluster is disk-starved."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # explode_outer, not explode: plain explode adds an implicit
-    # `size(sh)>0` filter that Catalyst pushes below the exchange with the
-    # whole interpreted shingle expression inlined — evaluated twice extra
-    # on the unparallelized scan. Every doc has ≥1 shingle, so the outer
-    # variant is semantically identical here.
-    ex = _docs_shingled(spark, sf_dir).select(
-        "doc_id", F.explode_outer("sh").alias("s")
-    )
-    hashed = ex.select(
-        "doc_id",
-        "s",
-        *[
-            F.md5(F.concat(F.lit(f"{j}:"), F.col("s"))).alias(f"h{j}")
-            for j in range(MINHASH_K)
-        ],
-    )
-    sig = hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{j}").alias(f"mh{j}") for j in range(MINHASH_K)],
-        F.collect_set("s").alias("shd"),
-    )
-    out = sig.persist()
-    _SIG_CACHE[key] = out
-    return out
+
+    def build() -> DataFrame:
+        # explode_outer, not explode: plain explode adds an implicit
+        # `size(sh)>0` filter that Catalyst pushes below the exchange with
+        # the whole interpreted shingle expression inlined — evaluated
+        # twice extra on the unparallelized scan. Every doc has ≥1
+        # shingle, so the outer variant is semantically identical here.
+        ex = _docs_shingled(spark, sf_dir).select(
+            "doc_id", F.explode_outer("sh").alias("s")
+        )
+        hashed = ex.select(
+            "doc_id",
+            "s",
+            *[
+                F.md5(F.concat(F.lit(f"{j}:"), F.col("s"))).alias(f"h{j}")
+                for j in range(MINHASH_K)
+            ],
+        )
+        sig = hashed.groupBy("doc_id").agg(
+            *[F.min(f"h{j}").alias(f"mh{j}") for j in range(MINHASH_K)],
+            F.collect_set("s").alias("shd"),
+        )
+        return sig.persist()
+
+    return memo(spark, sf_dir, ("sig_shingles",), build)
 
 
 def _candidate_pairs(
@@ -289,15 +247,6 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> materialized cluster frame. Connected
-# components is iterative (localCheckpoint per round breaks plan
-# identity), so Spark's plan-keyed cache manager can never share it
-# between queries — memoize the small (doc_id, cluster_id) result at the
-# session level instead. docs_dup_clusters and docs_pipeline both consume
-# it; one CC run per session per sf_dir.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS from the jaccard-verified near-dup pairs:
     connected components with the smallest doc_id as the cluster id, so
@@ -308,19 +257,20 @@ def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves)."""
     from flinkrunner_spark.operators.graph import connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _CLUSTER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    pairs = docs_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    result = connected_components(
-        pairs, docs, src="doc_a", dst="doc_b",
-        id_col="doc_id", label_col="cluster_id",
-    )  # already eagerly checkpointed; intermediates freed inside
-    _CLUSTER_CACHE[key] = result
-    return result
+    # Connected components is iterative (localCheckpoint per round breaks
+    # plan identity), so Spark's plan-keyed cache manager can never share
+    # it between queries — memoize the small (doc_id, cluster_id) result
+    # at the session level instead. docs_dup_clusters and docs_pipeline
+    # both consume it; one CC run per session per sf_dir.
+    def build() -> DataFrame:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        pairs = docs_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        return connected_components(
+            pairs, docs.select("doc_id"), src="doc_a", dst="doc_b",
+            id_col="doc_id", label_col="cluster_id",
+        )  # already eagerly checkpointed; intermediates freed inside
+
+    return memo(spark, sf_dir, ("dup_clusters",), build)
 
 
 def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,6 +44,7 @@ from flinkrunner_spark.llm.similarity import (
     _emb,
     as_double,
     dot,
+    list_matrix,
 )
 
 EMB_DIM = 64
@@ -220,9 +221,7 @@ def emb_knn_pq(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            E = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = list_matrix(cols["embedding"], n)
             E = E / np.linalg.norm(E, axis=1, keepdims=True)
             score = np.zeros(n)
             for j in range(m):

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.util.memo import memo, pin
+
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
 KNN_K = 10
 
@@ -35,6 +37,24 @@ KNN_K = 10
 def as_double(arr) -> Column:
     c = F.col(arr) if isinstance(arr, str) else arr
     return F.transform(c, lambda x: x.cast("double"))
+
+
+def list_matrix(col, n: int):
+    """The (n, dim) float64 matrix behind an Arrow list column of ``n``
+    equal-length lists, reshaped out of the flat values buffer with no
+    per-row Python. A null list or a ragged batch raises ``ValueError``:
+    either would silently shift every later row of the reshape."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if col.null_count:
+        raise ValueError(f"list column has {col.null_count} null rows")
+    lens = pc.min_max(pc.list_value_length(col))
+    if lens["min"] != lens["max"]:
+        raise ValueError(
+            f"ragged list column: lengths {lens['min']}..{lens['max']}"
+        )
+    return np.asarray(col.flatten(), dtype=np.float64).reshape(n, -1)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -305,51 +325,6 @@ def rh_planes(
     return out
 
 
-# (applicationId, sf_dir, bands, bits) -> persisted (vec_id, band, code)
-# frame. Memoized (same lifecycle discipline as llm.dedup._SIG_CACHE) so
-# the Arrow-batched code generation — the Python-side cost of the family —
-# runs once per corpus per session: the count-first super-bucket guard,
-# the pair expansion and rhlsh_bucket_stats all read it.
-# llm.dedup.release_caches() drains this cache too, so bench warm passes
-# measure executed plans, not cache hits.
-_RH_CODES_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-# (applicationId, sf_dir) -> persisted per-label centroid frame
-# (n_labels rows — tiny). docs_cluster_assign and emb_knn_join both
-# consume it; memoizing removes the repeated explode+two-level-fold
-# subtree from every plan that broadcasts the centroids.
-_CENTROID_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _caches() -> tuple[dict, ...]:
-    return (_RH_CODES_CACHE, _CENTROID_CACHE, _KMEANS_CACHE, _IVF_CACHE)
-
-
-def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist memoized similarity frames (``sf_dir=None`` = all)."""
-    for cache in _caches():
-        for key in [k for k in cache if sf_dir is None or k[1] == sf_dir]:
-            entry = cache.pop(key)
-            frames = entry if isinstance(entry, tuple) else (entry,)
-            for df in frames:
-                if not isinstance(df, DataFrame):
-                    continue  # e.g. the cached n_cells int
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # context already stopped — nothing to free
-
-
-def _evict_stale(spark: SparkSession) -> None:
-    """Drop cache entries owned by a stopped SparkSession (their RDD
-    blocks died with the context; keeping the frames leaks driver memory
-    across session restarts in tests/services)."""
-    app = spark.sparkContext.applicationId
-    for cache in _caches():
-        for key in [k for k in cache if k[0] != app]:
-            del cache[key]
-
-
 def rh_codes_mapper(bands: int, bits: int):
     """The sign-code generator for ``mapInArrow`` over a
     (vec_id, embedding) frame — shared by the batch path (`_rh_codes`)
@@ -386,9 +361,7 @@ def rh_codes_mapper(bands: int, bits: int):
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            E = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = list_matrix(cols["embedding"], n)
             D = np.zeros((n, W.shape[0]))
             for i in range(W.shape[1]):  # exact left fold over dims
                 D = D + E[:, i, None] * W[None, :, i]
@@ -422,32 +395,26 @@ def _rh_codes(
     The frame is (n × bands) rows of three fixed-width ints (text- and
     embedding-free), so persisting it is cheap at any scale; the guard
     pass (bucket sizes) and the pair expansion both read it, paying the
-    numpy projection once."""
-    key = (spark.sparkContext.applicationId, sf_dir, bands, bits)
-    _evict_stale(spark)
-    cached = _RH_CODES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = _emb(spark, sf_dir)
-    out = (
-        emb.select("vec_id", "embedding")
+    numpy projection once. Memoized, so the Arrow-batched code
+    generation — the Python-side cost of the family — runs once per
+    corpus per session: the count-first super-bucket guard, the pair
+    expansion and rhlsh_bucket_stats all read it."""
+    return memo(
+        spark, sf_dir, ("rh_codes", bands, bits),
+        lambda: _emb(spark, sf_dir)
+        .select("vec_id", "embedding")
         .mapInArrow(rh_codes_mapper(bands, bits), schema=RH_CODES_SCHEMA)
-        .persist()
+        .persist(),
     )
-    _RH_CODES_CACHE[key] = out
-    return out
-
-
-_EMB_COUNT_CACHE: dict[str, int] = {}
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus row count — one metadata-only parquet count, memoized per
-    corpus so repeated calls (bits resolution, recall sampling, warm
-    bench passes) do not re-pay the count job."""
-    if sf_dir not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[sf_dir] = _emb(spark, sf_dir).count()
-    return _EMB_COUNT_CACHE[sf_dir]
+    corpus so repeated calls (bits resolution, recall sampling) do not
+    re-pay the count job."""
+    return memo(
+        spark, sf_dir, ("emb_count",), lambda: _emb(spark, sf_dir).count()
+    )
 
 
 def emb_dup_pairs_rhlsh(
@@ -612,8 +579,8 @@ def rh_pairs_from_codes(
             if not n:
                 continue
             cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            A = np.asarray(cols["ea"].flatten(), dtype=np.float64).reshape(n, -1)
-            B = np.asarray(cols["eb"].flatten(), dtype=np.float64).reshape(n, -1)
+            A = list_matrix(cols["ea"], n)
+            B = list_matrix(cols["eb"], n)
             d = np.zeros(n)
             for i in range(A.shape[1]):  # exact left fold, as above
                 d = d + A[:, i] * B[:, i]
@@ -787,7 +754,7 @@ def emb_dup_clusters(
     )
     for frame in (cc, hook, pairs):
         _free_checkpoint(frame)
-    return result
+    return pin(spark, sf_dir, result)  # freed by release_caches
 
 
 def rhlsh_recall_stats(
@@ -874,12 +841,8 @@ def rhlsh_recall_stats(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(cols["ea"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
-            B = np.asarray(cols["eb"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = list_matrix(cols["ea"], n)
+            B = list_matrix(cols["eb"], n)
             d = np.zeros(n)
             for i in range(A.shape[1]):  # exact left fold (see _rh_codes)
                 d = d + A[:, i] * B[:, i]
@@ -1053,11 +1016,6 @@ def dup_pairs_blas(
     )
 
 
-# (applicationId, sf_dir, n_cells) -> (assigned frame, centroid frame).
-# Memoized so training + the assignment scan run once per corpus per
-# session; released with the other similarity caches.
-_KMEANS_CACHE: dict[tuple[str, str, int], tuple[DataFrame, DataFrame]] = {}
-
 KMEANS_SAMPLE_CAP = 65536  # training-sample bound — fixed wrt corpus size
 KMEANS_ITERS = 20
 
@@ -1075,14 +1033,19 @@ def _kmeans_assigned(
     numpy argmin against the closure-broadcast centroid matrix —
     embarrassingly parallel at any scale, vectorized across rows and
     cells. The n_cells × dim centroid table re-exposes as a
-    broadcastable frame so probe selection stays JVM-side."""
+    broadcastable frame so probe selection stays JVM-side. Memoized, so
+    training + the assignment scan run once per corpus per session."""
+    return memo(
+        spark, sf_dir, ("kmeans", n_cells),
+        lambda: _train_kmeans(spark, sf_dir, n_cells),
+    )
+
+
+def _train_kmeans(
+    spark: SparkSession, sf_dir: str, n_cells: int
+) -> tuple[DataFrame, DataFrame]:
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells)
-    _evict_stale(spark)
-    cached = _KMEANS_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = _emb(spark, sf_dir)
     # Arrow transport (toPandas) for the sample — identical doubles,
     # ~10× less driver deserialize time than a py4j row collect at the
@@ -1132,9 +1095,7 @@ def _kmeans_assigned(
             if not n:
                 continue
             i_emb = batch.schema.names.index("embedding")
-            E = np.asarray(
-                batch.column(i_emb).flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = list_matrix(batch.column(i_emb), n)
             d = (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
             yield pa.RecordBatch.from_arrays(
                 [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
@@ -1142,7 +1103,6 @@ def _kmeans_assigned(
             )
 
     assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    _KMEANS_CACHE[key] = (assigned, cents)
     return assigned, cents
 
 
@@ -1272,14 +1232,10 @@ def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     session instead of inside every consumer's plan (the r4 driver bench
     showed emb_knn_join re-paying the centroid subtree on the warm
     pass)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _CENTROID_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _label_centroids(_emb(spark, sf_dir)).persist()
-    _CENTROID_CACHE[key] = out
-    return out
+    return memo(
+        spark, sf_dir, ("centroids",),
+        lambda: _label_centroids(_emb(spark, sf_dir)).persist(),
+    )
 
 
 def docs_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1488,12 +1444,6 @@ def ivf_cells(
     return max(min_cells, min(max_cells, 1 << math.ceil(math.log2(root))))
 
 
-# (applicationId, sf_dir) -> (assigned frame with a `cell` column,
-# centroid frame, n_cells). The learned coarse quantizer for the k-NN
-# join — trained once per corpus per session on the bounded sample.
-_IVF_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
-
-
 def _ivf_assigned(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, "object"]:
@@ -1508,16 +1458,18 @@ def _ivf_assigned(
     (``llm.pq._lloyds_blas``: argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
     GEMM per sweep) so a 65536-row sample trains against thousands of
     cells in seconds. First-argmin tie behavior matches the trainer and
-    the numpy mirror in tests bit-for-bit."""
+    the numpy mirror in tests bit-for-bit. Memoized: the learned coarse
+    quantizer is trained once per corpus per session."""
+    return memo(spark, sf_dir, ("ivf",), lambda: _train_ivf(spark, sf_dir))
+
+
+def _train_ivf(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int, "object"]:
     import numpy as np
 
     from flinkrunner_spark.llm.pq import _lloyds_blas
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _IVF_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = _emb(spark, sf_dir)
     n_cells = ivf_cells(emb.count())
     # Arrow transport for the training sample (toPandas), not the py4j
@@ -1554,9 +1506,7 @@ def _ivf_assigned(
             if not n:
                 continue
             i_emb = batch.schema.names.index("embedding")
-            E = np.asarray(
-                batch.column(i_emb).flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = list_matrix(batch.column(i_emb), n)
             d = cc - 2.0 * (E @ C.T)  # same BLAS form as the trainer
             yield pa.RecordBatch.from_arrays(
                 [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
@@ -1564,8 +1514,7 @@ def _ivf_assigned(
             )
 
     assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    _IVF_CACHE[key] = (assigned, cents, n_cells, cents_np)
-    return _IVF_CACHE[key]
+    return assigned, cents, n_cells, cents_np
 
 
 def emb_knn_join(
@@ -1638,9 +1587,7 @@ def emb_knn_join(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            Q = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            Q = list_matrix(cols["qv"], n)
             qn = np.sqrt((Q * Q).sum(axis=1))
             ccos = np.round((Q @ C.T) / (qn[:, None] * cn[None, :]), 6)
             top = np.argsort(-ccos, axis=1, kind="stable")[:, :nprobe]
@@ -1675,12 +1622,8 @@ def emb_knn_join(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            Qm = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = list_matrix(cols["embedding"], n)
+            Qm = list_matrix(cols["qv"], n)
             cos = np.round(
                 (A * Qm).sum(axis=1)
                 / np.sqrt((A * A).sum(axis=1) * (Qm * Qm).sum(axis=1)),
@@ -1786,12 +1729,8 @@ def emb_knn_join_label(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            B = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = list_matrix(cols["embedding"], n)
+            B = list_matrix(cols["qv"], n)
             d = np.zeros(n)
             na = np.zeros(n)
             nb = np.zeros(n)

@@ -38,9 +38,10 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--cap"]
     cap_only = "--cap" in sys.argv[1:]
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "32"
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

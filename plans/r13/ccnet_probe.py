@@ -43,6 +43,7 @@ def main() -> None:
     print("cal_before:", cal())
 
     from flinkrunner_spark.llm import pruning as P
+    from flinkrunner_spark.util.memo import release_caches
 
     # stage 1: the persisted LM frame (localCheckpointed docs_lm_score
     # join) -- the selector's base
@@ -63,7 +64,7 @@ def main() -> None:
       lambda: P.docs_ccnet_buckets(spark, sf_dir).count(), reps=3)
 
     # cold-cache form: drop the memo persist, rebuild everything
-    P.release_caches()
+    release_caches()
     t("docs_ccnet_buckets count (cold caches)",
       lambda: P.docs_ccnet_buckets(spark, sf_dir).count())
     print("cal_after:", cal())

@@ -100,19 +100,11 @@ def main():
               f"pyworkers={nw}({rss}MB)", flush=True)
 
     print("== cold pass over all keys ==", flush=True)
-    from flinkrunner_spark.llm import (
-        collocations as llm_collocations,
-        dedup as llm_dedup,
-        dsir as llm_dsir,
-        lm as llm_lm,
-        pruning as llm_pruning,
-        similarity as llm_similarity,
-        sketches as llm_sketches,
-    )
+    from flinkrunner_spark.util.memo import release_caches
     t0 = time.perf_counter()
     for name, fn in sorted(queries.items()):
         if name == "docs_pipeline":
-            llm_dedup.release_caches()
+            release_caches()
         t1 = time.perf_counter()
         fn(spark, sf_dir).count()
         dt = time.perf_counter() - t1
@@ -120,9 +112,7 @@ def main():
             print(f"  [cold] {name}: {dt:.1f}s", flush=True)
     print(f"cold pass total: {time.perf_counter()-t0:.0f}s", flush=True)
 
-    for m in (llm_dedup, llm_similarity, llm_pruning, llm_lm,
-              llm_sketches, llm_collocations, llm_dsir):
-        m.release_caches()
+    release_caches()
 
     print("== post-cold panel (3 reps) ==", flush=True)
     for rep in range(3):

@@ -70,25 +70,13 @@ def main() -> None:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
     queries = entrymod.queries()
-    from flinkrunner_spark.llm import collocations as llm_collocations
-    from flinkrunner_spark.llm import dedup as llm_dedup
-    from flinkrunner_spark.llm import dsir as llm_dsir
-    from flinkrunner_spark.llm import lm as llm_lm
-    from flinkrunner_spark.llm import pruning as llm_pruning
-    from flinkrunner_spark.llm import similarity as llm_similarity
-    from flinkrunner_spark.llm import sketches as llm_sketches
+    from flinkrunner_spark.util.memo import release_caches
 
     for key in args:
         fn = queries[key]
         for r in range(reps):
             if not no_release:
-                llm_dedup.release_caches()
-                llm_similarity.release_caches()
-                llm_pruning.release_caches()
-                llm_lm.release_caches()
-                llm_sketches.release_caches()
-                llm_collocations.release_caches()
-                llm_dsir.release_caches()
+                release_caches()
             spark.sparkContext.setJobDescription(f"{key} rep{r}")
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)

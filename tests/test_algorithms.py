@@ -7,6 +7,7 @@ import numpy as np
 
 from flinkrunner_spark.algorithms.hll import estimate, update_registers
 from flinkrunner_spark.algorithms.sbf import StableBloomFilter
+from flinkrunner_spark.util.memo import release_caches
 
 
 def test_hll_relative_error():
@@ -99,7 +100,7 @@ def test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard(spark):
     from flinkrunner_spark.llm import similarity
 
     sf = "/root/testdata/sf0.001"
-    similarity.release_caches(sf)
+    release_caches(sf)
     default = similarity.emb_dup_pairs(spark, sf)
     assert set(default.columns) == {"vec_a", "vec_b", "cosine"}
     got = {(r["vec_a"], r["vec_b"]) for r in default.collect()}
@@ -110,7 +111,7 @@ def test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard(spark):
     assert got == lsh and got
     with pytest.raises(ValueError, match="quadratic"):
         similarity.emb_dup_pairs_blocked(spark, sf, max_block=10)
-    similarity.release_caches(sf)
+    release_caches(sf)
 
 
 def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
@@ -421,7 +422,7 @@ def test_emb_knn_join_matches_numpy_mirror(spark):
     from flinkrunner_spark.llm.pq import _lloyds_blas
 
     sf = "/root/testdata/sf0.001"
-    similarity.release_caches(sf)
+    release_caches(sf)
     rows = (
         spark.read.parquet(f"{sf}/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -481,7 +482,7 @@ def test_emb_knn_join_matches_numpy_mirror(spark):
         assert all(abs(t[2] - e[1]) < 2e-6 for t, e in zip(g, exp)), q
     # the quantizer is genuinely corpus-scaled, not the fixed label count
     assert k_cells == 32 and len(set(cell.tolist())) > 10
-    similarity.release_caches(sf)
+    release_caches(sf)
 
 
 def test_emb_knn_join_label_query_cap_binds(spark):
@@ -535,7 +536,7 @@ def test_rhlsh_super_bucket_cap_and_stats(spark):
     from flinkrunner_spark.llm import similarity
 
     sf = "/root/testdata/sf0.001"
-    similarity.release_caches(sf)
+    release_caches(sf)
     default_pairs = {
         (r["vec_a"], r["vec_b"])
         for r in similarity.emb_dup_pairs_rhlsh(spark, sf).collect()
@@ -555,7 +556,7 @@ def test_rhlsh_super_bucket_cap_and_stats(spark):
     assert 0 < row["max_bucket_size"] <= similarity.RH_MAX_BUCKET
     tight = similarity.rhlsh_bucket_stats(spark, sf, max_bucket=1).first()
     assert tight["dropped_buckets"] > 0
-    similarity.release_caches(sf)
+    release_caches(sf)
 
 
 def test_label_centroids_two_level_fold_bounded_and_exact(spark, monkeypatch):
@@ -631,7 +632,7 @@ def test_lsh_real_corpus_under_cap(spark):
     and the stats query reports the drop count as a first-class signal."""
     from flinkrunner_spark.llm import dedup
 
-    dedup.release_caches("/root/testdata/sf0.001")
+    release_caches("/root/testdata/sf0.001")
     n = dedup.docs_minhash_lsh(spark, "/root/testdata/sf0.001").count()
     assert n > 0
     row = dedup.lsh_bucket_stats(spark, "/root/testdata/sf0.001").first()
@@ -642,7 +643,7 @@ def test_lsh_real_corpus_under_cap(spark):
         spark, "/root/testdata/sf0.001", max_bucket=1
     ).first()
     assert tight["dropped_buckets"] > 0
-    dedup.release_caches("/root/testdata/sf0.001")
+    release_caches("/root/testdata/sf0.001")
 
 
 def test_sbf_aggregate_per_group(spark):

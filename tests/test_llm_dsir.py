@@ -122,22 +122,3 @@ def test_dsir_plan_broadcasts_llr_no_cartesian(spark):
     plan = dsir.docs_dsir_sample(spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_dsir_memo_persist_lifecycle(spark):
-    """r13 change 11: the hashed feature frame is memo-persisted per
-    (applicationId, sf_dir); release_caches() unpersists it, and
-    cache-hit and recompute paths yield identical samples."""
-    dsir.release_caches()
-    assert dsir._BUCKETED_CACHE == {}
-    out1 = dsir.docs_dsir_sample(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    bucketed = dsir._BUCKETED_CACHE[key]
-    assert bucketed.storageLevel.useMemory
-    assert dsir._bucketed_features(spark, SF) is bucketed  # memo hit
-    assert dsir.docs_dsir_sample(spark, SF).collect() == out1
-    dsir.release_caches(SF)
-    assert dsir._BUCKETED_CACHE == {}
-    assert not bucketed.storageLevel.useMemory
-    assert dsir.docs_dsir_sample(spark, SF).collect() == out1
-    dsir.release_caches()

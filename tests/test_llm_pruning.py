@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.pruning import docs_ccnet_buckets, emb_outliers
+from flinkrunner_spark.util.memo import release_caches
 
 SF = "/root/testdata/sf0.001"
 
@@ -304,7 +305,7 @@ def test_production_selectors_ship_zero_rows_to_driver(spark, monkeypatch):
     zero data rows even while the frames materialize."""
     from flinkrunner_spark.llm import pruning
 
-    pruning.release_caches()
+    release_caches()
     dataframe_cls = None
     collected = []
 
@@ -322,4 +323,4 @@ def test_production_selectors_ship_zero_rows_to_driver(spark, monkeypatch):
     assert emb_outliers(spark, SF).count() > 0
     assert collected == [], collected
     monkeypatch.undo()
-    pruning.release_caches()
+    release_caches()

@@ -227,50 +227,3 @@ def test_stream_emb_dup_pairs_matches_batch(spark):
         F.sum(F.size("ids")).alias("s")
     ).first()["s"]
     assert total_ids == n * similarity.RH_BANDS
-
-
-def test_sketches_memo_persist_lifecycle(spark):
-    """r13 change 11: the exploded token stream is memo-persisted per
-    (applicationId, sf_dir) — one frame serves the batch build, the
-    exact-count twin and the streaming probe — and release_caches()
-    unpersists both the stream and the per-call sketch pins."""
-    sketches.release_caches()
-    assert sketches._TOKS_CACHE == {} and sketches._SKETCH_PINS == []
-    out1 = sketches.docs_heavy_hitters(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    toks = sketches._TOKS_CACHE[key]
-    assert toks.storageLevel.useMemory  # persisted
-    assert len(sketches._SKETCH_PINS) == 1
-    # a second call reuses the SAME persisted frame (memo hit) and
-    # produces identical rows
-    assert sketches._token_stream_cached(spark, SF) is toks
-    out2 = sketches.docs_heavy_hitters(spark, SF).collect()
-    assert out2 == out1
-    sketches.release_caches(SF)
-    assert sketches._TOKS_CACHE == {} and sketches._SKETCH_PINS == []
-    assert not toks.storageLevel.useMemory  # unpersisted
-    # recompute-from-scratch path yields the same rows
-    assert sketches.docs_heavy_hitters(spark, SF).collect() == out1
-    sketches.release_caches()
-
-
-def test_collocations_memo_persist_lifecycle(spark):
-    """r13 change 11: the (w1, w2, c12) pair-count frame is
-    memo-persisted per (applicationId, sf_dir); every k/min_count
-    parameterization shares it, release_caches() unpersists it, and
-    cache-hit and recompute paths agree."""
-    from flinkrunner_spark.llm import collocations
-
-    collocations.release_caches()
-    assert collocations._C12_CACHE == {}
-    out1 = collocations.docs_pmi_bigrams(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    c12 = collocations._C12_CACHE[key]
-    assert c12.storageLevel.useMemory
-    assert collocations._pair_counts(spark, SF) is c12  # memo hit
-    assert collocations.docs_pmi_bigrams(spark, SF).collect() == out1
-    collocations.release_caches(SF)
-    assert collocations._C12_CACHE == {}
-    assert not c12.storageLevel.useMemory
-    assert collocations.docs_pmi_bigrams(spark, SF).collect() == out1
-    collocations.release_caches()

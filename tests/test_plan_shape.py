@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from flinkrunner_spark.plans import analytics
+from flinkrunner_spark.util.memo import release_caches
 
 SF = "/root/testdata/sf0.001"
 
@@ -123,35 +124,6 @@ def test_lsh_jaccard_consumes_shingles_from_cache(spark):
     cached = [n for n in names if "InMemoryRelation" in n]
     assert len(cached) >= 2, names
     assert len(cached) == len(names), names
-
-
-def test_release_caches_frees_executor_storage(spark):
-    """The persist/memoize lifecycle: after release_caches(sf_dir) the
-    signature frame's blocks are gone from executor storage and both
-    memo dicts drop their entries — a long-lived service sweeping many
-    corpora must not accumulate pinned frames."""
-    from flinkrunner_spark.llm import dedup as llm_dedup
-
-    def storage_ids():
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return {infos[i].id() for i in range(len(infos))}
-
-    llm_dedup.release_caches(SF)
-    baseline = storage_ids()
-    llm_dedup.docs_ngram_jaccard(spark, SF).count()
-    llm_dedup.docs_dup_clusters(spark, SF).count()
-    assert any(k[1] == SF for k in llm_dedup._SIG_CACHE)
-    assert any(k[1] == SF for k in llm_dedup._CLUSTER_CACHE)
-    grown = storage_ids() - baseline
-    assert grown  # the signature frame materialized into storage
-    llm_dedup.release_caches(SF)
-    assert not any(k[1] == SF for k in llm_dedup._SIG_CACHE)
-    assert not any(k[1] == SF for k in llm_dedup._CLUSTER_CACHE)
-    # persisted signature blocks, per-round CC checkpoints (freed when
-    # superseded inside connected_components) and the cluster frame's
-    # own checkpoint must ALL be gone — nothing this run pinned survives
-    leaked = storage_ids() & grown
-    assert not leaked, leaked
 
 
 # ---------------------------------------------------------------------------
@@ -342,13 +314,13 @@ def test_emb_knn_join_no_forced_probe_broadcast(spark):
     path."""
     from flinkrunner_spark.llm import similarity
 
-    similarity.release_caches(SF)
+    release_caches(SF)
     plan = _plan(spark, similarity.emb_knn_join)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("MapInArrow") >= 2, plan  # probe + scoring
     assert "MapInPandas" not in plan, plan  # fully ported (r14)
-    similarity.release_caches(SF)
+    release_caches(SF)
 
 
 def test_emb_outliers_adds_no_shuffle_over_assignment(spark):
@@ -357,15 +329,9 @@ def test_emb_outliers_adds_no_shuffle_over_assignment(spark):
     # shuffle+sort became a broadcast boundary-tuple join — the
     # cluster-key window would put a whole cluster through one task)
     from flinkrunner_spark.llm.pruning import emb_outliers
-    from flinkrunner_spark.llm.similarity import (
-        docs_cluster_assign,
-        release_caches,
-    )
+    from flinkrunner_spark.llm.similarity import docs_cluster_assign
 
     release_caches()  # all sf_dirs — a stale cached frame would skew the baseline
-    from flinkrunner_spark.llm import pruning as _pruning
-
-    _pruning.release_caches()
     plan = _plan(spark, emb_outliers)
     # the returned plan is a broadcast boundary-tuple join over the
     # PERSISTED assignment frame: everything ABOVE the cache boundary
