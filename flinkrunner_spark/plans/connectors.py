@@ -19,10 +19,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil as _shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from flinkrunner_spark.streaming.pipelines import drain, run_to_memory
 
 RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
 
@@ -30,16 +31,6 @@ RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
 def _loc(kind: str, sf_dir: str) -> str:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     return os.path.join(RT_ROOT, f"{kind}-{tag}")
-
-
-def _ephemeral_ckpt() -> str:
-    """Fresh RAM-backed checkpoint dir for a bounded streaming drain —
-    see streaming/pipelines.ephemeral_checkpoint (r13: per-micro-batch
-    offset-log/commit-log fsyncs on disk-backed temp dirs dominated the
-    bounded roundtrip drains). Caller removes it after q.stop()."""
-    from flinkrunner_spark.streaming.pipelines import ephemeral_checkpoint
-
-    return ephemeral_checkpoint()
 
 
 def _lang_profile(df: DataFrame) -> DataFrame:
@@ -246,9 +237,7 @@ def rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              "schema": ("doc_id long, text string, lang string, "
                         "source string, n_chars int")},
         ).load(spark)
-        profile = _lang_profile(
-            back.select("doc_id", "text", "lang", "source", "n_chars")
-        )
+        profile = _lang_profile(back)
         # the drain runs inside the broker's lifetime; materialize here
         rows = profile.collect()
     return spark.createDataFrame(rows, profile.schema)
@@ -410,8 +399,8 @@ def iceberg_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 def iceberg_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING-source roundtrip (reference `IcebergSourceConfig.scala`
     `streaming: true`): documents land in THREE append snapshots, the
-    jar-free streaming source drains them with an availableNow trigger
-    (one micro-batch per committed file set), and the collected stream
+    jar-free streaming source drains them to completion (one
+    micro-batch per committed file set), and the collected stream
     must profile identically to the original parquet — proving the
     file-stream-over-immutable-commits design loses nothing and
     duplicates nothing across snapshot boundaries."""
@@ -431,10 +420,8 @@ def iceberg_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rt",
         {"connector": "iceberg", "path": loc, "streaming": True,
          "start.strategy": "earliest"},
-    ).load(spark)
-    from flinkrunner_spark.streaming.pipelines import run_to_memory
-
-    back = run_to_memory(spark, src, "q_iceberg_stream_rt", mode="append")
+    )
+    back = run_to_memory(spark, src.load, "q_iceberg_stream_rt")
     return _lang_profile(back)
 
 
@@ -527,9 +514,10 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → native kafka produce → STREAMING read through the
     `kafka-native` Python Data Source (true micro-batch source: offset
     dicts checkpointed by the engine, one task per kafka partition,
-    ``max.offsets.per.trigger`` backpressure forcing a multi-batch
-    catch-up) → JSON parse → per-language profile. Exactly oracled
-    against the original parquet: the micro-batch seams must be
+    ``max.offsets.per.trigger`` set but not reached: the reader never
+    caps the first trigger of a fresh query, so the drain reads the
+    backlog in one data batch) → JSON parse → per-language profile.
+    Exactly oracled against the original parquet: the read must be
     loss-free and duplicate-free for the profile to match. The
     streaming twin of `kafka_roundtrip` — reference parity for the
     Flink consumer's continuous mode (KafkaSourceConfig.scala:1-133)
@@ -549,27 +537,15 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_stream_rt", "key.column": "doc_id"},
         ).write(docs)
-        sdf = KafkaSourceConfig(
+        src = KafkaSourceConfig(
             "rt",
             {"connector": "kafka", "transport": "native",
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_stream_rt", "streaming": True,
-             # ≥3 catch-up micro-batches at any sf ≥ 0.001
+             # inert on a fresh query: its first trigger is uncapped
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
-        ).load(spark)
-        _ck = _ephemeral_ckpt()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kafka_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        back = spark.sql("SELECT value FROM q_kafka_stream_rt")
+        back = run_to_memory(spark, src.load, "q_kafka_stream_rt")
         parsed = back.select(
             F.from_json(
                 F.col("value").cast("string"),
@@ -656,7 +632,7 @@ def stream_rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              "queue": "docs_stream_rt", "use.correlation.id": True,
              "correlation.id.column": "doc_id"},
         ).write(docs)
-        sdf = RabbitMQSourceConfig(
+        src = RabbitMQSourceConfig(
             "rt",
             {"connector": "rabbitmq", "uri": broker.uri,
              "queue": "docs_stream_rt", "streaming": True,
@@ -664,23 +640,8 @@ def stream_rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "source string, n_chars int"),
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.messages.per.read": max(n_docs // 3, 64)},
-        ).load(spark)
-        _ck = _ephemeral_ckpt()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_rabbitmq_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        back = spark.sql(
-            "SELECT doc_id, text, lang, source, n_chars "
-            "FROM q_rabbitmq_stream_rt"
-        )
+        back = run_to_memory(spark, src.load, "q_rabbitmq_stream_rt")
         profile = _lang_profile(back)
         rows = profile.collect()
     return spark.createDataFrame(rows, profile.schema)
@@ -961,27 +922,16 @@ def stream_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              "key.column": "doc_id", "region": "us-east-1",
              "endpoint": ks.endpoint, **creds},
         ).write(docs)
-        sdf = KinesisSourceConfig(
+        src = KinesisSourceConfig(
             "rt",
             {"connector": "kinesis", "stream": "docs_stream_rt",
              "streaming": True, "aws.region": "us-east-1",
              "aws.endpoint": ks.endpoint,
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.records.per.shard": max(n_docs // 9, 32), **creds},
-        ).load(spark)
-        _ck = _ephemeral_ckpt()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kinesis_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        parsed = spark.sql("SELECT value FROM q_kinesis_stream_rt").select(
+        back = run_to_memory(spark, src.load, "q_kinesis_stream_rt")
+        parsed = back.select(
             F.from_json(
                 F.col("value"),
                 ("doc_id long, text string, lang string, "
@@ -1246,12 +1196,12 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper → PII redaction → Iceberg sink via foreachBatch with batch-id
     idempotence — every stage individually driver-green, composed here
     the way a user deploys them, oracled against the batch composition
-    of the same stages over the original parquet. max.offsets.per.trigger
-    forces the catch-up through several micro-batches, so the dedup
-    state and the iceberg batch commits must both survive batch seams
-    for the profile to match; kill-and-resume (checkpoint restart
-    mid-stream plus a replayed-batch no-op) is pinned by
-    tests/test_curation_pipeline.py."""
+    of the same stages over the original parquet. The catch-up is one
+    data batch (the kafka reader never caps the first trigger of a
+    fresh query, so max.offsets.per.trigger does not bind here).
+    Kill-and-resume (checkpoint restart mid-stream plus a replayed-batch
+    no-op), where the dedup state and the iceberg commits must survive
+    batch seams, is pinned by tests/test_curation_pipeline.py."""
     import shutil
 
     from flinkrunner_spark.iceberg import IcebergFsTable
@@ -1268,10 +1218,6 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.count()
     loc = _loc("curation-iceberg", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
-    # ephemeral RAM-backed checkpoint for the bounded catch-up drain
-    # (fresh per run, removed after stop — the restart surface keeps its
-    # own durable checkpoints in tests/test_curation_pipeline.py)
-    ckpt = _ephemeral_ckpt()
     table = os.path.join(loc, "table")
     with LoopbackKafkaBroker(num_partitions=4) as broker:
         KafkaSinkConfig(
@@ -1280,36 +1226,22 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_curation", "key.column": "doc_id"},
         ).write(docs)
-        stream = KafkaSourceConfig(
+        src = KafkaSourceConfig(
             "rt",
             {"connector": "kafka", "transport": "native",
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_curation", "streaming": True,
-             # ≥3 catch-up micro-batches at any sf ≥ 0.001
+             # inert on a fresh query: its first trigger is uncapped
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
-        ).load(spark)
-        # size state/shuffle partitions TO THE DRAIN — the backlog is
-        # already counted (n_docs), so the partition count derives from
-        # drain volume via drain_state_partitions (r14: replaces the
-        # literal "8" the r13 verdict flagged — at a 100 TB backlog the
-        # same rule yields thousands of stores spread over the cluster,
-        # env/conf-overridable); restored after the query
-        from flinkrunner_spark.streaming.pipelines import (
-            drain_state_partitions,
         )
-
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(drain_state_partitions(spark, n_rows=n_docs)),
+        # the backlog is already counted, so the drain sizes its state
+        # partitions from it (drain_state_partitions: at a 100 TB backlog
+        # thousands of stores spread over the cluster)
+        drain(
+            spark,
+            lambda s, ckpt: start_curation_to_iceberg(src.load(s), table, ckpt),
+            n_rows=n_docs,
         )
-        q = start_curation_to_iceberg(stream, table, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-            _shutil.rmtree(ckpt, ignore_errors=True)
     back = IcebergFsTable(table).read(spark)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2112,8 +2044,9 @@ def stream_kafka_ts_offsets_roundtrip(
     """Streaming twin of `kafka_ts_offsets_roundtrip`: the native
     STREAM reader's initialOffset resolves `starting.offset` epoch
     millis per partition (ListOffsets-by-timestamp, no-match → log
-    end), then the unbounded tail replays through multi-batch catch-up
-    (`max.offsets.per.trigger`). The reference's replay-from-timestamp
+    end), then the unbounded tail replays in one data batch
+    (`max.offsets.per.trigger` is set, but the reader never caps the
+    first trigger of a fresh query). The reference's replay-from-timestamp
     consumer shape (OffsetsInitializer.timestamp on a STREAMING
     KafkaSource). Exactly oracled: the profile over everything from
     base+LO onward must equal the doc_id >= LO filter on the raw
@@ -2141,27 +2074,16 @@ def stream_kafka_ts_offsets_roundtrip(
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_tsst", "key.column": "doc_id"},
         ).write(ordered)
-        sdf = KafkaSourceConfig(
+        src = KafkaSourceConfig(
             "tsst",
             {"connector": "kafka", "transport": "native",
              "bootstrap.servers": f"localhost:{broker.port}",
              "topic": "docs_tsst", "streaming": True,
              "starting.offset": str(TS_OFF_BASE + TS_OFF_LO),
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
-        ).load(spark)
-        _ck = _ephemeral_ckpt()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kafka_tsst")
-            .option("checkpointLocation", _ck)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        parsed = spark.sql("SELECT value FROM q_kafka_tsst").select(
+        back = run_to_memory(spark, src.load, "q_kafka_tsst")
+        parsed = back.select(
             F.from_json(
                 F.col("value").cast("string"),
                 ("doc_id long, text string, lang string, "

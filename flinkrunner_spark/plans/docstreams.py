@@ -32,7 +32,7 @@ def stream_documents(
 ) -> DataFrame:
     """File-backed documents stream: a /tmp copy range-partitioned on
     doc_id into ``splits`` files with strictly increasing mtimes, read
-    with ``maxFilesPerTrigger=1`` — under availableNow that is one
+    with ``maxFilesPerTrigger=1`` — a bounded drain runs one
     micro-batch per file, oldest first (the same real-multi-batch
     harness as ``streaming/pipelines.stream_events``)."""
     path = (
@@ -66,21 +66,22 @@ def stream_topk_ngrams(
     deterministic (cnt desc, n, ngram) cut picks the final top-k."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    docs = stream_documents(spark, sf_dir, splits=4)
-    t = docs.select(tokens_col().alias("toks"))
-    uni = t.select(F.explode("toks").alias("ngram"), F.lit(1).alias("n"))
-    bi = t.select(
-        F.explode(bigrams_col(F.col("toks"))).alias("ngram"),
-        F.lit(2).alias("n"),
-    )
-    counts = (
-        uni.unionByName(bi)
-        .groupBy("n", "ngram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    final = P.run_to_memory(
-        spark, counts, "q_stream_topk_ngrams", mode="complete"
-    )
+    def build(s: SparkSession) -> DataFrame:
+        t = stream_documents(s, sf_dir, splits=4).select(
+            tokens_col().alias("toks")
+        )
+        uni = t.select(F.explode("toks").alias("ngram"), F.lit(1).alias("n"))
+        bi = t.select(
+            F.explode(bigrams_col(F.col("toks"))).alias("ngram"),
+            F.lit(2).alias("n"),
+        )
+        return (
+            uni.unionByName(bi)
+            .groupBy("n", "ngram")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+
+    final = P.run_to_memory(spark, build, "q_stream_topk_ngrams", mode="complete")
     return final.orderBy(F.col("cnt").desc(), "n", "ngram").limit(k)
 
 
@@ -103,8 +104,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flinkrunner_spark.streaming import pipelines as P
 
-    docs = stream_documents(spark, sf_dir, splits=4)
-    toks = docs.select(F.explode(tokens_col()).alias("tok"))
     cells = F.array(
         *[
             F.struct(
@@ -114,13 +113,18 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in range(CMS_DEPTH)
         ]
     )
-    sketch_stream = (
-        toks.select(F.explode(cells).alias("c"))
-        .groupBy("c.row", "c.bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+
+    def build(s: SparkSession) -> DataFrame:
+        return (
+            stream_documents(s, sf_dir, splits=4)
+            .select(F.explode(tokens_col()).alias("tok"))
+            .select(F.explode(cells).alias("c"))
+            .groupBy("c.row", "c.bucket")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+
     sketch = P.run_to_memory(
-        spark, sketch_stream, "q_stream_heavy_hitters", mode="complete"
+        spark, build, "q_stream_heavy_hitters", mode="complete"
     )
     return rank_heavy_hitters(spark, sf_dir, sketch)
 
@@ -186,15 +190,18 @@ def stream_emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nbits, probes = resolve_rh_plan(
         _emb_count(spark, sf_dir), COSINE_DUP_THRESHOLD
     )
-    emb_stream = stream_embeddings(spark, sf_dir, splits=4)
-    codes = emb_stream.select("vec_id", "embedding").mapInArrow(
-        rh_codes_mapper(RH_BANDS, nbits), schema=RH_CODES_SCHEMA
-    )
-    index_stream = codes.groupBy("band", "code").agg(
-        F.collect_set("vec_id").alias("ids")
-    )
+
+    def build(s: SparkSession) -> DataFrame:
+        return (
+            stream_embeddings(s, sf_dir, splits=4)
+            .select("vec_id", "embedding")
+            .mapInArrow(rh_codes_mapper(RH_BANDS, nbits), schema=RH_CODES_SCHEMA)
+            .groupBy("band", "code")
+            .agg(F.collect_set("vec_id").alias("ids"))
+        )
+
     index = P.run_to_memory(
-        spark, index_stream, "q_stream_emb_dup_pairs", mode="complete"
+        spark, build, "q_stream_emb_dup_pairs", mode="complete"
     )
     # SNAPSHOT the online index for the batch report: the probe/verify
     # tail self-joins the codes frame (sizes guard + anti-join + probe

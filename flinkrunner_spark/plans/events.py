@@ -26,6 +26,16 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
+def _events_stream(
+    s: SparkSession, sf_dir: str, lateness: str = "10 minutes"
+) -> DataFrame:
+    """The event stream the drains below declare on their scoped session:
+    four event-time-ordered files, one micro-batch each."""
+    from flinkrunner_spark.streaming import pipelines as P
+
+    return P.stream_events(s, sf_dir, lateness=lateness, splits=4)
+
+
 def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All order-independent reference aggregates keyed by event_type
     (FlinkRunnerAggregateFunction applied per key)."""
@@ -41,13 +51,11 @@ def stream_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter how the input splits into micro-batches."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4).drop(
-        "props"
-    )
-    agg = ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
-    return P.run_to_memory(
-        spark, agg, "q_stream_agg_basic", mode="complete"
-    )
+    def build(s: SparkSession) -> DataFrame:
+        ev = _events_stream(s, sf_dir, "365 days").drop("props")
+        return ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
+
+    return P.run_to_memory(spark, build, "q_stream_agg_basic", mode="complete")
 
 
 def stream_agg_basic_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,9 +69,7 @@ def stream_agg_basic_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.streaming import pipelines as P
 
     def build(s: SparkSession) -> DataFrame:
-        ev = P.stream_events(s, sf_dir, lateness="365 days", splits=4).drop(
-            "props"
-        )
+        ev = _events_stream(s, sf_dir, "365 days").drop("props")
         return ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
 
     return P.run_updates_final(spark, build, ["event_type"])
@@ -374,9 +380,10 @@ def stream_win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch ``win_tumbling`` plan and shares its exact oracle."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
-        spark, P.streaming_tumbling_agg(ev), "q_stream_win_tumbling",
+        spark,
+        lambda s: P.streaming_tumbling_agg(_events_stream(s, sf_dir)),
+        "q_stream_win_tumbling",
         mode="complete",
     )
 
@@ -387,9 +394,10 @@ def stream_win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch result, so it shares ``win_session``'s exact oracle."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
-        spark, P.streaming_session_agg(ev), "q_stream_win_session",
+        spark,
+        lambda s: P.streaming_session_agg(_events_stream(s, sf_dir)),
+        "q_stream_win_session",
         mode="complete",
     )
 
@@ -400,9 +408,10 @@ def stream_win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     across triggers, so it shares ``win_sliding``'s exact oracle."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
-        spark, P.streaming_sliding_agg(ev), "q_stream_win_sliding",
+        spark,
+        lambda s: P.streaming_sliding_agg(_events_stream(s, sf_dir)),
+        "q_stream_win_sliding",
         mode="complete",
     )
 
@@ -423,12 +432,10 @@ def stream_win_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is closed by end of stream."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
-        P.streaming_tumbling_agg(ev),
+        lambda s: P.streaming_tumbling_agg(_events_stream(s, sf_dir, APPEND_LATENESS)),
         "q_stream_win_tumbling_append",
-        mode="append",
     )
 
 
@@ -438,12 +445,10 @@ def stream_win_sliding_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
-        P.streaming_sliding_agg(ev),
+        lambda s: P.streaming_sliding_agg(_events_stream(s, sf_dir, APPEND_LATENESS)),
         "q_stream_win_sliding_append",
-        mode="append",
     )
 
 
@@ -453,12 +458,10 @@ def stream_win_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted. Oracle: batch sessions whose end ≤ final watermark."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
-        P.streaming_session_agg(ev),
+        lambda s: P.streaming_session_agg(_events_stream(s, sf_dir, APPEND_LATENESS)),
         "q_stream_win_session_append",
-        mode="append",
     )
 
 
@@ -468,15 +471,14 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams with watermarks. Exact SQL oracle (bounded inner join)."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev1 = P.stream_events(spark, sf_dir, lateness="2 hours", splits=4)
-    ev2 = P.stream_events(spark, sf_dir, lateness="2 hours", splits=4)
-    purchases = ev1.filter(F.col("event_type") == "purchase")
-    clicks = ev2.filter(F.col("event_type") == "click")
-    return P.run_to_memory(
-        spark,
-        P.streaming_interval_join(purchases, clicks),
-        "q_stream_interval_join",
-    )
+    def build(s: SparkSession) -> DataFrame:
+        ev1 = _events_stream(s, sf_dir, "2 hours")
+        ev2 = _events_stream(s, sf_dir, "2 hours")
+        purchases = ev1.filter(F.col("event_type") == "purchase")
+        clicks = ev2.filter(F.col("event_type") == "click")
+        return P.streaming_interval_join(purchases, clicks)
+
+    return P.run_to_memory(spark, build, "q_stream_interval_join")
 
 
 def stream_win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,9 +489,11 @@ def stream_win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shares ``win_ema``'s exact oracle."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
-        spark, P.streaming_ema_agg(ev), "q_stream_win_ema", mode="complete"
+        spark,
+        lambda s: P.streaming_ema_agg(_events_stream(s, sf_dir)),
+        "q_stream_win_ema",
+        mode="complete",
     )
 
 
@@ -499,10 +503,13 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it shares ``enrich_events``'s exact oracle."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, splits=4)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     return P.run_to_memory(
-        spark, P.streaming_enrich(ev, cust), "q_stream_enrich"
+        spark,
+        lambda s: P.streaming_enrich(
+            _events_stream(s, sf_dir),
+            s.read.parquet(f"{sf_dir}/customer.parquet"),
+        ),
+        "q_stream_enrich",
     )
 
 
@@ -515,9 +522,10 @@ def stream_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     clear gate error) — tests cover both branches."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir)
     sink = P.run_to_memory(
-        spark, P.streaming_running_agg(ev), "q_stream_running_agg"
+        spark,
+        lambda s: P.streaming_running_agg(P.stream_events(s, sf_dir)),
+        "q_stream_running_agg",
     )
     final = F.max(F.struct("n", "total")).alias("s")
     return (
@@ -535,17 +543,19 @@ def stream_dedup_sbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     very output. Kept-row set is probabilistic — rows-only oracle here;
     the contract row is the exact signal.
 
-    Runs as a single availableNow trigger (splits=1) deliberately: the
+    Runs as a single-batch drain (splits=1, no file cap) deliberately: the
     SBF's stability property *forgets* old keys by design, so across many
     micro-batches a decayed key may legitimately be re-kept — the
     keep-first projection is exact only within one filter pass, which is
     also true of the reference's per-operator-instance filter."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days")
     return P.run_to_memory(
         spark,
-        P.streaming_dedup_sbf(ev, dedupe_col=("user_id", "event_type")),
+        lambda s: P.streaming_dedup_sbf(
+            P.stream_events(s, sf_dir, lateness="365 days"),
+            dedupe_col=("user_id", "event_type"),
+        ),
         "q_stream_dedup_sbf",
     ).select("user_id", "event_type", "event_id")
 
@@ -568,10 +578,9 @@ def stream_filter_by_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch as-of `filter_by_control` oracle holds exactly."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
     return P.run_to_memory(
         spark,
-        P.streaming_filter_by_control(ev),
+        lambda s: P.streaming_filter_by_control(_events_stream(s, sf_dir, "365 days")),
         "q_stream_filter_by_control",
     )
 
@@ -585,12 +594,13 @@ def stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed state demonstrably survives batch transitions."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
     return P.run_to_memory(
         spark,
-        P.streaming_dedup_keep_first(ev),
+        lambda s: P.streaming_dedup_keep_first(
+            _events_stream(s, sf_dir, "365 days").select(
+                "event_id", "ts", "user_id", "event_type", "value"
+            )
+        ),
         "q_stream_dedup_first",
     )
 
@@ -603,9 +613,10 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     `asof_join` oracle holds exactly."""
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
     return P.run_to_memory(
-        spark, P.streaming_asof_join(ev), "q_stream_asof_join"
+        spark,
+        lambda s: P.streaming_asof_join(_events_stream(s, sf_dir, "365 days")),
+        "q_stream_asof_join",
     )
 
 
@@ -618,8 +629,11 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flinkrunner_spark.streaming import pipelines as P
 
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
-    sink = P.run_to_memory(spark, P.streaming_hll(ev), "q_stream_hll_users")
+    sink = P.run_to_memory(
+        spark,
+        lambda s: P.streaming_hll(_events_stream(s, sf_dir, "365 days")),
+        "q_stream_hll_users",
+    )
     w = Window.partitionBy("event_type").orderBy(F.col("seq").desc())
     return (
         sink.withColumn("_rn", F.row_number().over(w))

@@ -6,8 +6,9 @@ watermarks (bounded lateness), windowed aggregation, and stateful
 keep-first dedup via ``applyInPandasWithState`` (the Spark analog of the
 reference's keyed ValueState in SBFDeduplicationFilter).
 
-Tests drive these with the memory sink + ``processAllAvailable()`` —
-a deterministic, synchronous way to run a bounded stream to completion.
+``run_to_memory`` and ``run_updates_final`` drive these over a bounded
+input to completion through one drain core (``drain``) — a
+deterministic, synchronous way to run a bounded stream.
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
 
 
 DRAIN_ROWS_PER_PARTITION = 100_000  # target keyed-state rows per store
+DRAIN_PARTITIONS_KEY = "spark.flinkrunner.drainStatePartitions"
 
 
 def drain_state_partitions(
@@ -67,9 +69,9 @@ def drain_state_partitions(
     it again, flat below 4), so a drain wants the FEWEST partitions that
     still hold state comfortably:
 
-    * ``SPARK_GRAFT_DRAIN_STATE_PARTITIONS`` (env) or
-      ``spark.flinkrunner.drainStatePartitions`` (conf) override wins —
-      the production knob;
+    * the ``spark.flinkrunner.drainStatePartitions`` conf wins — the
+      production knob; it must parse as an integer ≥ 1, anything else
+      raises ``ValueError`` naming the key and the value;
     * with a known drain volume (``n_rows`` — e.g. the curation catch-up
       counts its backlog), partitions = ceil(n_rows / rows_per_partition)
       clamped to [floor, 8 × defaultParallelism]: a 100 TB backlog gets
@@ -77,14 +79,17 @@ def drain_state_partitions(
       keeps the measured-optimal handful;
     * otherwise ``floor`` — the local mirrors' measured optimum.
     """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_DRAIN_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    conf = spark.conf.get("spark.flinkrunner.drainStatePartitions", None)
-    if conf:
-        return int(conf)
+    raw = spark.conf.get(DRAIN_PARTITIONS_KEY, None)
+    if raw is not None:
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        if n < 1:
+            raise ValueError(
+                f"{DRAIN_PARTITIONS_KEY} must be an integer >= 1, got {raw!r}"
+            )
+        return n
     if n_rows is None:
         return floor
     cap = 8 * spark.sparkContext.defaultParallelism
@@ -104,8 +109,8 @@ def stream_events(
     ``splits > 1`` turns the single-batch mirror into a REAL multi-batch
     run: the copy is range-partitioned on event time into ``splits``
     files whose modification times increase in range order, and the
-    source reads with ``maxFilesPerTrigger=1`` — under the availableNow
-    trigger Spark then processes one file per micro-batch, oldest first,
+    source reads with ``maxFilesPerTrigger=1`` — a bounded drain
+    (``drain``) then processes one file per micro-batch, oldest first,
     i.e. event-time-ordered arrival. Rows with EQUAL timestamps always
     share a file (range partitioning on ts alone), so the keyed-state
     mirrors' in-batch (ts, control/right-first, id) replay order is never
@@ -484,9 +489,11 @@ def streaming_filter_by_control(
     it; across batches the persisted flag gates everything until the next
     control arrives. As with any streaming gate (Flink's included), a
     control row arriving in a LATER batch than data it precedes in event
-    time cannot retro-gate those already-emitted rows — under the
-    availableNow single-batch mirror this never happens, so the batch
-    as-of oracle holds exactly."""
+    time cannot retro-gate those already-emitted rows — in a
+    single-batch drain this never happens, and in the event-time-ordered
+    multi-batch drains (``stream_events(splits=n)``) control rows never
+    arrive after the data they precede, so the batch as-of oracle holds
+    exactly."""
     out_schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double"
@@ -559,8 +566,9 @@ def streaming_asof_join(
     sorted-merge pass (operators/joins.asof_join_merge). Left events with
     no preceding right are dropped (inner as-of). Same one-trigger
     caveat as every streaming gate: a right event arriving in a later
-    batch cannot retro-match already-emitted left rows; under the
-    availableNow single-batch mirror the batch oracle holds exactly."""
+    batch cannot retro-match already-emitted left rows; in a
+    single-batch or event-time-ordered drain the batch oracle holds
+    exactly."""
     out_schema = (
         "event_id long, ts timestamp, user_id long, "
         "click_id long, click_ts timestamp"
@@ -783,13 +791,68 @@ def streaming_running_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def run_updates_final(
-    spark: SparkSession,
-    build,
-    keys: list[str],
-    state_partitions: int | None = None,
-    path: str | None = None,
-) -> DataFrame:
+def drain(spark: SparkSession, start, n_rows: int | None = None) -> SparkSession:
+    """Run one BOUNDED streaming query until its input is used up, then
+    stop it — the run-once, batch-like use of a streaming query. Every
+    drain in the package goes through here.
+
+    ``start(session, checkpoint)`` declares the query on the session it
+    is given and returns the started ``StreamingQuery``. That session is
+    scoped to this drain: ``spark.newSession()`` carrying every
+    modifiable SQL setting of the caller (a bare ``newSession()`` would
+    drop runtime settings such as ``spark.sql.session.timeZone``) plus
+    ``spark.sql.shuffle.partitions`` = ``drain_state_partitions(spark,
+    n_rows)``. A streaming query takes its state-partition count from
+    the session that declared its frame, so the caller's conf is never
+    touched. The floor is 4 for every drain, ``run_updates_final``
+    included (it pinned 8 before r14; its results do not depend on the
+    partition count and its checkpoint is ephemeral). Python data
+    sources are per session: ``start`` must load its sources from the
+    session it is given (every ``SourceConfig.load`` registers its own),
+    and it runs with that session active; the caller's session is active
+    again afterwards.
+
+    The stop condition is ``processAllAvailable``, not an
+    ``availableNow`` trigger: the simple stream readers with a per-read
+    cap (RabbitMQ, Kinesis) drain one capped batch under
+    ``availableNow``. The checkpoint is a fresh ``ephemeral_checkpoint``
+    removed afterwards, also when ``start`` or the query fails.
+
+    Returns the scoped session, on which sink tables (memory-sink views)
+    live. Progress of these queries reaches the event log, but a
+    ``StreamingQueryListener`` attached to the caller's session does not
+    see them — read drain progress from the event log."""
+    import shutil
+
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set(
+        "spark.sql.shuffle.partitions", str(drain_state_partitions(spark, n_rows))
+    )
+    # Spark refuses to register a Python data source on a session that
+    # lacks it when the ACTIVE session already knows the name (say, the
+    # caller read kafka-native before), so ``start`` runs with the
+    # scoped session active
+    jsessions = SparkSession._get_j_spark_session_class(spark._jvm)
+    ckpt = ephemeral_checkpoint()
+    try:
+        jsessions.setActiveSession(session._jsparkSession)
+        try:
+            q = start(session, ckpt)
+        finally:
+            jsessions.setActiveSession(spark._jsparkSession)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return session
+
+
+def run_updates_final(spark: SparkSession, build, keys: list[str]) -> DataFrame:
     """Drive a (bounded) streaming aggregation in UPDATE output mode and
     return the FINAL emission per key — the upsert-sink configuration.
 
@@ -802,37 +865,25 @@ def run_updates_final(
     Sink traffic is O(keys touched per batch), state never re-scanned.
 
     ``build`` is a ``Callable[[SparkSession], DataFrame]`` that declares
-    the streaming aggregate; it runs on a cloned session
-    (``spark.newSession()``) whose ``spark.sql.shuffle.partitions`` is
-    pinned to ``state_partitions`` (default: ``drain_state_partitions``
-    — env/conf-overridable, scale-adaptive; no literal pin) —
-    query-scoped, so concurrent queries on the caller's session never
-    observe a mutated global conf.
+    the streaming aggregate on the drain's scoped session (see ``drain``).
 
     The sink is executor-side end to end: each micro-batch's update rows
-    are stamped with the batch id and appended to ``path`` as parquet BY
-    THE EXECUTORS (the driver never sees a row — the exact shape a JDBC
-    MERGE / key-value upsert takes at scale, with parquet standing in for
-    the store). The final emission per key is then selected read-side
-    (max batch id wins); because streaming aggregate state is cumulative,
-    that row IS the full-input aggregate, so for order-independent
-    aggregates the result is bit-identical to the batch oracle. The
-    returned frame is localCheckpoint-materialized (it is O(keys) small)
-    so the staging directory can be deleted immediately."""
+    are stamped with the batch id and appended as parquet BY THE
+    EXECUTORS to a RAM-backed staging dir (the driver never sees a row —
+    the exact shape a JDBC MERGE / key-value upsert takes at scale, with
+    parquet standing in for the store). The final emission per key is
+    then selected read-side (max batch id wins); because streaming
+    aggregate state is cumulative, that row IS the full-input aggregate,
+    so for order-independent aggregates the result is bit-identical to
+    the batch oracle. The returned frame is localCheckpoint-materialized
+    (it is O(keys) small) so the staging dir is deleted on return."""
     import glob
     import shutil
 
-    # same RAM-backed ephemeral base as the checkpoints: the staging
-    # dir is written and deleted within this call (the result is
-    # localCheckpoint-materialized before the rmtree below), so its
-    # durability is a non-goal; callers passing an explicit ``path``
-    # (the production upsert-sink stand-in) keep full control
-    staged = path or ephemeral_checkpoint(prefix="flinkrunner_updates_")
-    if state_partitions is None:
-        state_partitions = drain_state_partitions(spark)
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    df = build(s2)
+    from pyspark.sql.window import Window
+
+    staged = ephemeral_checkpoint(prefix="flinkrunner_updates_")
+    built: list[DataFrame] = []
 
     def sink(bdf: DataFrame, bid: int) -> None:
         # executor-side append; at scale this body is MERGE INTO / upsert
@@ -840,76 +891,48 @@ def run_updates_final(
             staged
         )
 
-    ckpt = ephemeral_checkpoint()
-    try:
-        q = (
-            df.writeStream.foreachBatch(sink)
+    def start(session: SparkSession, ckpt: str):
+        built.append(build(session))
+        return (
+            built[0].writeStream.foreachBatch(sink)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+
+    try:
+        drain(spark, start)
+        if not glob.glob(staged + "/part-*"):
+            return spark.createDataFrame([], built[0].schema)
+        w = Window.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
+        return (
+            spark.read.parquet(staged)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_batch_id")
+            .localCheckpoint(eager=True)
+        )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    from pyspark.sql.window import Window
-
-    if not glob.glob(staged + "/part-*"):
         shutil.rmtree(staged, ignore_errors=True)
-        return spark.createDataFrame([], df.schema)
-    out = spark.read.parquet(staged)
-    w = Window.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
-    result = (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_batch_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(staged, ignore_errors=True)
-    return result
 
 
 def run_to_memory(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    mode: str = "append",
-    state_partitions: int | None = None,
+    spark: SparkSession, build, name: str, mode: str = "append"
 ) -> DataFrame:
     """Drive a (bounded) stream to completion into a memory sink; return
-    the sink contents as a batch DataFrame. Use mode="complete" for
+    the sink contents as a batch DataFrame. ``build`` is a
+    ``Callable[[SparkSession], DataFrame]`` that declares the stream on
+    the drain's scoped session (see ``drain``); the returned frame and
+    the ``name`` view belong to that session. Use mode="complete" for
     watermarked aggregations so the trailing windows (still within
-    lateness when input ends) are included.
-
-    ``state_partitions`` pins shuffle/state-store partitioning for the
-    stream (restored afterwards): every stateful-op partition pays a
-    fixed state-store maintenance cost PER MICRO-BATCH — including the
-    empty watermark-flush batch — so local mirrors with small state want
-    few partitions (32→8 measured 9.5s→2.1s on the interval join in r1;
-    8→4 halved the 4-micro-batch interval join again in r4, flat below
-    4). The default comes from ``drain_state_partitions`` (env/conf
-    override, volume-derived when the caller knows the backlog) instead
-    of a literal; scan parallelism is unaffected either way (file
-    splits, not shuffle partitions, drive the source)."""
-    import shutil
-
-    if state_partitions is None:
-        state_partitions = drain_state_partitions(spark)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    ckpt = ephemeral_checkpoint()
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.sql(f"SELECT * FROM {name}")
+    lateness when input ends) are included."""
+    session = drain(
+        spark,
+        lambda s, ckpt: build(s)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .start(),
+    )
+    return session.table(name)

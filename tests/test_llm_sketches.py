@@ -27,6 +27,22 @@ def _hex8(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
+def _capture_sinks(monkeypatch) -> dict:
+    """Record every memory-sink frame by query name: the sink view lives
+    on the drain's scoped session, not on the test's."""
+    from flinkrunner_spark.streaming import pipelines as P
+
+    sinks: dict = {}
+    real = P.run_to_memory
+
+    def spy(spark, build, name, mode="append"):
+        sinks[name] = real(spark, build, name, mode)
+        return sinks[name]
+
+    monkeypatch.setattr(P, "run_to_memory", spy)
+    return sinks
+
+
 def _cms_mirror(spark, width: int):
     rows = spark.read.parquet(f"{SF}/documents.parquet").collect()
     toks = [t for r in rows for t in _tokens(r["text"])]
@@ -139,13 +155,16 @@ def test_rank_heavy_hitters_unseen_candidate_estimates_zero(spark):
     assert out["zz-never-seen-token-zz"] >= 0
 
 
-def test_stream_heavy_hitters_matches_batch_and_state_is_bounded(spark):
+def test_stream_heavy_hitters_matches_batch_and_state_is_bounded(
+    spark, monkeypatch
+):
     """The streaming-state sketch must equal the batch twin exactly
     (order-independent counters — any micro-batch split is fine), and
     the state the stream carries is the O(D×W) counter table, never
     O(vocabulary)."""
     from flinkrunner_spark.plans import docstreams
 
+    sinks = _capture_sinks(monkeypatch)
     batch = [
         (r["token"], r["est_count"], r["exact_count"], r["rk"])
         for r in sketches.docs_heavy_hitters(spark, SF).orderBy("rk").collect()
@@ -159,7 +178,7 @@ def test_stream_heavy_hitters_matches_batch_and_state_is_bounded(spark):
     assert streamed == batch and len(batch) > 0
     # the complete-mode state table the stream materialized is the
     # bounded sketch itself
-    state = spark.table("q_stream_heavy_hitters")
+    state = sinks["q_stream_heavy_hitters"]
     assert state.count() <= sketches.CMS_DEPTH * sketches.CMS_WIDTH
 
 
@@ -199,7 +218,7 @@ def test_docs_pmi_bigrams_matches_counter_mirror(spark):
     assert len({p for p, *_ in scored}) > 1
 
 
-def test_stream_emb_dup_pairs_matches_batch(spark):
+def test_stream_emb_dup_pairs_matches_batch(spark, monkeypatch):
     """The streaming RH-LSH index must yield EXACTLY the batch pair set:
     id-set accumulation is order-independent, so four real micro-batches
     produce the batch buckets, and the shared probe/verify tail does the
@@ -208,6 +227,7 @@ def test_stream_emb_dup_pairs_matches_batch(spark):
     from flinkrunner_spark.llm import similarity
     from flinkrunner_spark.plans import docstreams
 
+    sinks = _capture_sinks(monkeypatch)
     batch = {
         (r["vec_a"], r["vec_b"], r["cosine"])
         for r in similarity.emb_dup_pairs_rhlsh(spark, SF).collect()
@@ -217,7 +237,7 @@ def test_stream_emb_dup_pairs_matches_batch(spark):
         for r in docstreams.stream_emb_dup_pairs(spark, SF).collect()
     }
     assert streamed == batch and len(batch) > 0
-    state = spark.table("q_stream_emb_dup_pairs")
+    state = sinks["q_stream_emb_dup_pairs"]
     assert set(state.columns) == {"band", "code", "ids"}
     # every vector appears in every band exactly once across the index
     from pyspark.sql import functions as F

@@ -12,14 +12,16 @@ from flinkrunner_spark.streaming import pipelines as P
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def events_stream(spark):
-    return P.stream_events(spark, SF)
+def events_stream(s):
+    return P.stream_events(s, SF)
 
 
-def test_streaming_tumbling_matches_batch(spark, events_stream):
+def test_streaming_tumbling_matches_batch(spark):
     got = P.run_to_memory(
-        spark, P.streaming_tumbling_agg(events_stream), "t_tumb", mode="complete"
+        spark,
+        lambda s: P.streaming_tumbling_agg(events_stream(s)),
+        "t_tumb",
+        mode="complete",
     )
     from flinkrunner_spark.tables import load_table
 
@@ -40,10 +42,10 @@ def test_streaming_tumbling_matches_batch(spark, events_stream):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_streaming_dedup_keep_first(spark, events_stream):
+def test_streaming_dedup_keep_first(spark):
     got = P.run_to_memory(
         spark,
-        P.streaming_dedup_keep_first(events_stream),
+        lambda s: P.streaming_dedup_keep_first(events_stream(s)),
         "t_dedup",
     )
     from flinkrunner_spark.operators.dedup import dedup_first
@@ -68,9 +70,9 @@ def test_streaming_dedup_ttl_evicts_and_reemits(spark, tmp_path):
 
     from flinkrunner_spark.streaming import pipelines as P
 
-    def mkstream(src):
+    def mkstream(s, src):
         return (
-            spark.readStream.schema("ts timestamp, event_id long, k string")
+            s.readStream.schema("ts timestamp, event_id long, k string")
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
@@ -113,22 +115,22 @@ def test_streaming_dedup_ttl_evicts_and_reemits(spark, tmp_path):
             write(src, rows)
         got = P.run_to_memory(
             spark,
-            P.streaming_dedup_keep_first(
-                mkstream(src), key_cols=["k"], num_buckets=1, ttl_sec=ttl
+            lambda s: P.streaming_dedup_keep_first(
+                mkstream(s, src), key_cols=["k"], num_buckets=1, ttl_sec=ttl
             ),
             f"t_dedup_{name}",
         )
         assert sorted(r["event_id"] for r in got.collect()) == expect
 
 
-def test_streaming_dedup_sbf_invariants(spark, events_stream):
+def test_streaming_dedup_sbf_invariants(spark):
     """SBF streaming dedup on a key with real duplicates: no false
     negatives (no key passes twice at this tiny fill level, where the
     decrement can't clear a just-set cell schedule) and at most a
     handful of false-positive drops."""
     got = P.run_to_memory(
         spark,
-        P.streaming_dedup_sbf(events_stream, dedupe_col="user_id"),
+        lambda s: P.streaming_dedup_sbf(events_stream(s), dedupe_col="user_id"),
         "t_dedup_sbf",
     )
     from flinkrunner_spark.tables import load_table
@@ -141,10 +143,10 @@ def test_streaming_dedup_sbf_invariants(spark, events_stream):
     assert len(kept) >= int(n_distinct * 0.98)  # FPR-bounded drops
 
 
-def test_streaming_session_agg_runs(spark, events_stream):
+def test_streaming_session_agg_runs(spark):
     got = P.run_to_memory(
         spark,
-        P.streaming_session_agg(events_stream),
+        lambda s: P.streaming_session_agg(events_stream(s)),
         "t_sess",
         mode="complete",
     )
@@ -250,13 +252,15 @@ def test_streaming_hll_merges_state_across_batches(spark, tmp_path):
         )
         _time.sleep(1.1)  # distinct mtimes → deterministic batch order
 
-    stream = (
-        spark.readStream.schema("event_type string, user_id string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = P.run_to_memory(
-        spark, P.streaming_hll(stream, b=12), "hll_multibatch"
+        spark,
+        lambda s: P.streaming_hll(
+            s.readStream.schema("event_type string, user_id string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src),
+            b=12,
+        ),
+        "hll_multibatch",
     )
     rows = sink.collect()
     assert max(r["seq"] for r in rows) > 1, "expected multiple micro-batches"
@@ -312,13 +316,12 @@ def test_streaming_control_gate_state_across_batches(spark, tmp_path):
         (5, "2024-01-01 10:11:00", 8, "view", 3.0, ""),     # no control yet
     ])
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = P.run_to_memory(
-        spark, P.streaming_filter_by_control(stream), "ctl_multibatch"
+        spark,
+        lambda s: P.streaming_filter_by_control(
+            s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        ),
+        "ctl_multibatch",
     )
     got = sorted(r["event_id"] for r in sink.collect())
     assert got == [2], got
@@ -366,19 +369,18 @@ def test_streaming_asof_state_across_batches(spark, tmp_path):
         (5, "2024-01-01 10:09:00", 7, "purchase", 3.0, ""),  # ← click 4
     ])
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = P.run_to_memory(
-        spark, P.streaming_asof_join(stream), "asof_multibatch"
+        spark,
+        lambda s: P.streaming_asof_join(
+            s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        ),
+        "asof_multibatch",
     )
     got = {r["event_id"]: r["click_id"] for r in sink.collect()}
     assert got == {3: 1, 5: 4}, got
 
 
-def test_running_agg_tws_or_gated(spark, events_stream):
+def test_running_agg_tws_or_gated(spark):
     """transformWithStateInPandas running aggregate: exact totals when the
     protobuf dependency is present; a clear ImportError gate otherwise."""
     import pytest
@@ -389,13 +391,13 @@ def test_running_agg_tws_or_gated(spark, events_stream):
         import google.protobuf  # noqa: F401
     except ImportError:
         with pytest.raises(ImportError, match="protobuf"):
-            P.streaming_running_agg(events_stream)
+            P.streaming_running_agg(events_stream(spark))
         return
 
     from pyspark.sql import functions as F
 
     out = P.run_to_memory(
-        spark, P.streaming_running_agg(events_stream), "tws_run"
+        spark, lambda s: P.streaming_running_agg(events_stream(s)), "tws_run"
     )
     final = (
         out.groupBy("event_type")
@@ -497,12 +499,14 @@ def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_BASE", str(tmp_path))
     src = str(tmp_path / "in")
     spark.range(10).write.mode("overwrite").parquet(src)
-    df = (
-        spark.readStream.schema("id long").parquet(src)
+    out = P.run_to_memory(
+        spark,
+        lambda s: s.readStream.schema("id long").parquet(src)
         .groupBy((F.col("id") % 2).alias("k"))
-        .count()
+        .count(),
+        "q_ckpt_cleanup",
+        mode="complete",
     )
-    out = P.run_to_memory(spark, df, "q_ckpt_cleanup", mode="complete")
     assert out.count() == 2
     left = [d for d in os.listdir(tmp_path) if d.startswith("flinkrunner-ckpt-")]
     assert left == [], f"checkpoint dirs left behind: {left}"

@@ -40,16 +40,17 @@ def _random_events(seed: int, n: int = 400) -> pd.DataFrame:
 
 def _stream_from_pdf(spark, pdf: pd.DataFrame, tmpdir: str, splits: int):
     """Write pdf as `splits` event-time-ordered files (equal ts never
-    straddle a file) and open a maxFilesPerTrigger=1 parquet stream —
-    the same mechanism stream_events uses."""
+    straddle a file); return an opener of the maxFilesPerTrigger=1
+    parquet stream over them for a drain's session — the same mechanism
+    stream_events uses."""
     df = spark.createDataFrame(pdf).repartitionByRange(splits, "ts")
     df.write.mode("overwrite").parquet(tmpdir)
     parts = sorted(glob.glob(tmpdir + "/part-*"))
     t0 = time.time() - len(parts) - 1
     for i, p in enumerate(parts):
         os.utime(p, (t0 + i, t0 + i))
-    return (
-        spark.readStream.schema(
+    return lambda s: (
+        s.readStream.schema(
             "event_id long, ts timestamp, user_id long, "
             "event_type string, value double"
         )
@@ -59,21 +60,10 @@ def _stream_from_pdf(spark, pdf: pd.DataFrame, tmpdir: str, splits: int):
     )
 
 
-def _run(spark, sdf, name: str) -> pd.DataFrame:
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}").toPandas()
+def _run(spark, op, ev, name: str) -> pd.DataFrame:
+    from flinkrunner_spark.streaming.pipelines import run_to_memory
+
+    return run_to_memory(spark, lambda s: op(ev(s)), name).toPandas()
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -82,7 +72,7 @@ def test_bucketed_dedup_first_random_multibatch(spark, tmp_path, seed):
 
     pdf = _random_events(seed)
     ev = _stream_from_pdf(spark, pdf, str(tmp_path / "src"), splits=5)
-    got = _run(spark, streaming_dedup_keep_first(ev), f"p_dedup_{seed}")
+    got = _run(spark, streaming_dedup_keep_first, ev, f"p_dedup_{seed}")
 
     want = (
         pdf.sort_values(["ts", "event_id"])
@@ -97,7 +87,7 @@ def test_bucketed_filter_by_control_random_multibatch(spark, tmp_path, seed):
 
     pdf = _random_events(seed)
     ev = _stream_from_pdf(spark, pdf, str(tmp_path / "src"), splits=5)
-    got = _run(spark, streaming_filter_by_control(ev), f"p_ctl_{seed}")
+    got = _run(spark, streaming_filter_by_control, ev, f"p_ctl_{seed}")
 
     # independent oracle: per user, replay (ts, control-first, event_id);
     # data rows pass while the latest control is 'signup'
@@ -120,7 +110,7 @@ def test_bucketed_asof_join_random_multibatch(spark, tmp_path, seed):
 
     pdf = _random_events(seed)
     ev = _stream_from_pdf(spark, pdf, str(tmp_path / "src"), splits=5)
-    got = _run(spark, streaming_asof_join(ev), f"p_asof_{seed}")
+    got = _run(spark, streaming_asof_join, ev, f"p_asof_{seed}")
     got_map = {
         r["event_id"]: (r["click_id"], pd.Timestamp(r["click_ts"]))
         for _, r in got.iterrows()
