@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm import dedup as D
 from flinkrunner_spark.llm import text as T
+from flinkrunner_spark.util.hashing import hex8_long
 
 QUALITY_THRESHOLD = 1.58
 
@@ -92,15 +93,7 @@ def docs_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     different salt yields an independent re-split. 90/5/5 train/val/test."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split:v1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8_long(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split:v1"))))
         % 100
     )
     return docs.select(

@@ -12,8 +12,9 @@ Two quantizers:
   ORACLED quantized index.
 * ``emb_knn_pq`` — product quantization (PQ, Jégou et al. 2011): the
   vector splits into M=8 subspaces, each with its own K=256-centroid
-  codebook trained by the IVF quantizer's deterministic sampled-Lloyd's
-  recipe in BLAS form (``_lloyds_blas`` — one GEMM per sweep); a vector
+  codebook trained by the coarse quantizer's deterministic sampled-Lloyd's
+  recipe in BLAS form (``similarity._lloyds_blas`` — one GEMM per
+  sweep) on the same md5-ordered sample (``_train_sample``); a vector
   stores as M code bytes (8 bytes vs 256 float bytes — 32×), a query
   scores candidates via ADC table lookups, and the ADC shortlist
   re-ranks by exact cosine (faiss IndexRefineFlat).
@@ -42,6 +43,9 @@ from pyspark.sql import functions as F
 from flinkrunner_spark.llm.similarity import (
     KNN_K,
     _emb,
+    _lloyds_blas,
+    _query,
+    _train_sample,
     as_double,
     dot,
     list_matrix,
@@ -52,39 +56,6 @@ SQ_LEVELS = 255  # 8-bit levels
 PQ_M = 8  # subspaces
 PQ_K = 256  # centroids per subspace (8-bit codes; 64-bit total — the standard PQ8x8)
 PQ_TRAIN_CAP = 16384  # bounded training sample (faiss's train-on-sample recipe)
-
-
-def _lloyds_blas(sample, k: int, iters: int = 12):
-    """Deterministic Lloyd's over an in-memory sample — the IVF
-    quantizer's recipe (strided hash-order init, first-argmin ties,
-    emptied cells keep their centroid) with the distance computed in
-    BLAS form: argmin ||x-c||² = argmin(c·c − 2 x·C^T), one GEMM per
-    sweep instead of an (n, k, dim) broadcast tensor — the difference
-    between ~16 s and <1 s at the training cap. Distances here exist
-    only to pick argmins; the numpy mirror in tests re-derives
-    codebooks through this same expression, so assignment is
-    reproducible bit-for-bit."""
-    import numpy as np
-
-    n = len(sample)
-    cents = sample[[(i * n) // k for i in range(k)]].copy()
-    for _ in range(iters):
-        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (sample @ cents.T)
-        lab = d.argmin(axis=1)  # first (lowest) cell on ties
-        # vectorized recenter (per-dim weighted bincount): the per-cell
-        # boolean-mask loop is O(k·n) per sweep — at k=256 it, not the
-        # GEMM, dominated training. Emptied cells keep their centroid.
-        counts = np.bincount(lab, minlength=k).astype(np.float64)
-        sums = np.stack(
-            [
-                np.bincount(lab, weights=sample[:, t], minlength=k)
-                for t in range(sample.shape[1])
-            ],
-            axis=1,
-        )
-        nz = counts > 0
-        cents[nz] = sums[nz] / counts[nz, None]
-    return cents
 
 
 def emb_knn_sq8(
@@ -111,7 +82,7 @@ def emb_knn_sq8(
             *[F.max(F.element_at("v", i)) for i in range(1, dim + 1)]
         ).alias("mx"),
     )
-    q = emb.filter(F.col("vec_id") == query_id).select(F.col("v").alias("qv"))
+    q = _query(emb, query_id, "v")
 
     def _dq(i):
         x = F.element_at("v", i)
@@ -145,15 +116,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, m: int = PQ_M, kc: int = PQ_
     a numpy array of shape (m, kc, dim/m)."""
     import numpy as np
 
-    emb = _emb(spark, sf_dir)
-    pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(PQ_TRAIN_CAP)
-        .toPandas()  # Arrow transfer — row-object collect() was ~3s of
-        # the training constant at the cap
-    )
-    S = np.array([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
+    S = _train_sample(spark, sf_dir, PQ_TRAIN_CAP)
     S = S / np.linalg.norm(S, axis=1, keepdims=True)
     sub = S.shape[1] // m
     return np.stack(
@@ -193,10 +156,8 @@ def emb_knn_pq(
 
     C = _pq_codebooks(spark, sf_dir, m, kc)  # (m, kc, sub)
     emb = _emb(spark, sf_dir)
-    qrow = emb.filter(F.col("vec_id") == query_id).select(
-        as_double("embedding").alias("e")
-    ).collect()
-    qv = np.asarray(qrow[0]["e"], dtype=np.float64)
+    q = _query(emb, query_id).select(as_double("qv").alias("qv"))
+    qv = np.asarray(q.first()["qv"], dtype=np.float64)
     qv = qv / np.linalg.norm(qv)
     sub = qv.shape[0] // m
     # ADC tables: adc[j, c] = <q_subj, C[j, c]>
@@ -205,12 +166,8 @@ def emb_knn_pq(
     )  # (m, kc)
 
     def gen_score(it):
-        # mapInArrow (guide §4.2, r14): the embedding matrix reshapes out
-        # of the list column's flat values buffer — zero per-row Python
-        # over the full-corpus compressed scan; the input is projected to
-        # the two columns the function reads (guide §4.1), so the scan
-        # prunes the rest instead of shipping every column through the
-        # Python boundary.
+        # the input is projected to the two columns this reads, so the
+        # scan prunes the rest instead of shipping them through Python
         import pyarrow as pa
 
         for batch in it:
@@ -247,9 +204,6 @@ def emb_knn_pq(
     )
     # exact re-rank of the shortlist: broadcast the candidate ids, read
     # their true vectors, rank by exact cosine against the raw query.
-    q = emb.filter(F.col("vec_id") == query_id).select(
-        as_double("embedding").alias("qv")
-    )
     cos = F.round(
         dot(F.col("e"), F.col("qv"))
         / F.sqrt(dot(F.col("e"), F.col("e")) * dot(F.col("qv"), F.col("qv"))),

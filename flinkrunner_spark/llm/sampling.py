@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm import text as T
+from flinkrunner_spark.util.hashing import hex8_long
 
 
 # Per-language sampling rates for the training mix (out of 10000);
@@ -35,17 +36,9 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the train/val/test assignment."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit(":strata:v1"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8_long(
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":strata:v1")))
+        )
         % 10000
     )
     rate = F.lit(STRATA_DEFAULT)
@@ -89,9 +82,7 @@ def docs_pack_sequences(
     base = docs.select(
         "doc_id",
         h.alias("h"),
-        (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % shards
-        ).alias("shard"),
+        (hex8_long(h) % shards).alias("shard"),
         T.bpe_tokens_col().alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
@@ -127,9 +118,7 @@ def docs_shuffle_shards(
     base = docs.select(
         "doc_id",
         h.alias("h"),
-        (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % shards
-        ).alias("shard"),
+        (hex8_long(h) % shards).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return base.select(
@@ -217,17 +206,9 @@ def docs_weighted_sample(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("n_chars") > 0
     )
-    m = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit(":wsample:v1"))
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    m = hex8_long(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":wsample:v1")))
+    )
     u = (m + F.lit(1)).cast("double") / F.lit(4294967296.0)  # (0, 1]
     key = F.log(u) / F.col("n_chars")
     top = (

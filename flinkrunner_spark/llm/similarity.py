@@ -18,9 +18,16 @@ embedding: array<float>, label).
   At scale the probed cell is a partition-pruned read of a
   centroid-bucketed table.
 
-Dot products are JVM-side ``zip_with``/``aggregate`` folds over doubles —
-the same left-fold the DuckDB oracle's ``list_reduce`` performs, so
-cosines are bit-identical (no Python, no Arrow transfer in the hot path).
+Every operator here is built from three shared steps: a quantizer
+trained on a bounded md5-ordered sample (``_quantizer``), cell
+assignment, and exact scoring of candidate pairs — JVM folds within a
+cell (``cell_pairs``) or one Arrow kernel over pair frames
+(``exact_cosine``). Exact dot products fold left over the dims from 0.0
+on both sides of the Arrow boundary — the ``zip_with``/``aggregate``
+folds on the JVM and the sequential-over-dims numpy loops in the
+``mapInArrow`` mappers perform the same IEEE adds as the DuckDB
+oracle's ``list_reduce`` — so cosines are bit-identical, and rounding
+stays on the JVM (Spark's Round is what the oracles' ``_r6`` mirrors).
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.util.hashing import hex8_long
 from flinkrunner_spark.util.memo import memo, pin
 
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
@@ -71,12 +79,101 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _query(emb: DataFrame, query_id: int, col: str = "embedding") -> DataFrame:
+    """The one-row ``qv`` frame of ``query_id`` for the single-query k-NN
+    keys. An unknown id raises ``ValueError`` naming it: a typo'd id must
+    not come back as an empty top-k."""
+    q = emb.filter(F.col("vec_id") == query_id).select(F.col(col).alias("qv"))
+    if q.isEmpty():
+        raise ValueError(f"unknown query vec_id {query_id}")
+    return q
+
+
+def _side(df: DataFrame, tag: str, *keep: str) -> DataFrame:
+    """One side of an exact-cosine pair frame: ``vec_<tag>``,
+    ``e<tag>`` (the embedding as given) and ``n<tag>``, its squared norm
+    folded ONCE per row on the JVM, plus the ``keep`` columns. The
+    aggregate/zip_with left fold is bit-identical to a numpy fold over
+    the dims, so two 8-byte scalars per pair replace two O(dim) folds per
+    pair."""
+    e = as_double("embedding")
+    return df.select(
+        *keep,
+        F.col("vec_id").alias(f"vec_{tag}"),
+        F.col("embedding").alias(f"e{tag}"),
+        dot(e, e).alias(f"n{tag}"),
+    )
+
+
+def _cosine_kernel(it):
+    """``mapInArrow`` body of :func:`exact_cosine`: both embedding
+    columns reshape out of their flat Arrow buffers with no per-row
+    Python, and the dot is the exact left fold over dims (the same IEEE
+    adds as SQL ``aggregate`` and DuckDB ``list_reduce``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    for batch in it:
+        n = batch.num_rows
+        if not n:
+            continue
+        A = list_matrix(batch.column("ea"), n)
+        B = list_matrix(batch.column("eb"), n)
+        d = np.zeros(n)
+        for i in range(A.shape[1]):
+            d = d + A[:, i] * B[:, i]
+        na = np.asarray(batch.column("na"), dtype=np.float64)
+        nb = np.asarray(batch.column("nb"), dtype=np.float64)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("vec_a"),
+                batch.column("vec_b"),
+                pa.array(d / np.sqrt(na * nb), type=pa.float64()),
+            ],
+            ["vec_a", "vec_b", "cosine_raw"],
+        )
+
+
+def exact_cosine(pairs: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cosine) over a frame joining two :func:`_side`
+    frames (``vec_a``/``ea``/``na`` and ``vec_b``/``eb``/``nb``): the raw
+    cosine comes from one Arrow kernel and is rounded to 6 on the JVM —
+    Spark's Round (shortest-decimal-repr HALF_UP) is what every embedding
+    oracle's ``_r6`` reproduces; ``np.round`` is not."""
+    return (
+        pairs.select("vec_a", "vec_b", "ea", "eb", "na", "nb")
+        .mapInArrow(
+            _cosine_kernel, schema="vec_a long, vec_b long, cosine_raw double"
+        )
+        .select("vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine"))
+    )
+
+
+def cell_pairs(frame: DataFrame, key: str, threshold: float) -> DataFrame:
+    """(key, vec_a, vec_b, cosine) for every pair of ``frame`` rows
+    (key, vec_id, embedding) that share ``key``, with vec_a < vec_b and
+    rounded cosine ≥ ``threshold``: a self-join on the key scored by
+    exact JVM folds, norms attached once per row (:func:`_side`). Pair
+    work is Σ cell², so callers must keep cells bounded."""
+    # widen once per row so the per-pair folds read doubles (_side's
+    # own widening of a double array is then an identity)
+    normed = frame.select(
+        key, "vec_id", as_double("embedding").alias("embedding")
+    )
+    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+    return (
+        _side(normed, "a", key)
+        .join(_side(normed, "b", key), [key])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select(key, "vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def emb_knn(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = KNN_K) -> DataFrame:
     """Brute-force cosine top-k neighbors of ``query_id``."""
     emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("qv")
-    )
+    q = _query(emb, query_id)
     cos = cosine(as_double("embedding"), as_double("qv"))
     return (
         emb.crossJoin(F.broadcast(q))
@@ -152,35 +249,7 @@ def emb_dup_pairs_blocked(
             "quadratic — use emb_dup_pairs (RH-LSH) or "
             "emb_dup_pairs_blas (bounded tiles) at this scale"
         )
-    normed = emb.select(
-        "label",
-        "vec_id",
-        as_double("embedding").alias("e"),
-    ).withColumn("nrm", dot(F.col("e"), F.col("e")))
-    a = normed.select(
-        F.col("label").alias("l"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = normed.select(
-        F.col("label").alias("l"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    return (
-        a.join(b, ["l"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            F.col("l").alias("label"),
-            "vec_a",
-            "vec_b",
-            F.round(cos, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return cell_pairs(emb, "label", threshold)
 
 
 RH_BANDS = 24  # random-hyperplane LSH: bands (OR over bands → recall)
@@ -199,15 +268,20 @@ def predicted_recall(
     bits (q = Σ_{j≤probes} C(bits,j)·p^(bits-j)·(1-p)^j), bands OR
     (recall = 1-(1-q)^bands). Deterministic given the md5 planes — the
     measured companion is ``rhlsh_recall_stats``."""
+    return 1.0 - (1.0 - _band_match(threshold, bits, probes)) ** bands
+
+
+def _band_match(threshold: float, bits: int, probes: int) -> float:
+    """q, the probability that one band matches for a pair at cosine
+    ``threshold`` (the term :func:`predicted_recall` ORs over bands)."""
     import math
 
     theta = math.acos(max(-1.0, min(1.0, threshold)))
     p = 1.0 - theta / math.pi
-    q = sum(
+    return sum(
         math.comb(bits, j) * p ** (bits - j) * (1.0 - p) ** j
         for j in range(min(probes, bits) + 1)
     )
-    return 1.0 - (1.0 - q) ** bands
 
 
 def auto_probes(
@@ -330,13 +404,10 @@ def rh_codes_mapper(bands: int, bits: int):
     (vec_id, embedding) frame — shared by the batch path (`_rh_codes`)
     and the streaming twin (`plans/docstreams.stream_emb_dup_pairs`).
 
-    mapInArrow (guide §4.2, r14 — same rewrite as `gen_cosine`): the
-    embedding list column is ONE contiguous values buffer + offsets per
-    batch, so the (n, dim) matrix reshapes out of the flat buffer with
-    zero per-row Python, where the previous mapInPandas form paid a
-    per-row ndarray conversion for every corpus row (this mapper runs
-    over the FULL embedding table — the widest Python boundary in the
-    family).
+    The embedding list column is ONE contiguous values buffer + offsets
+    per batch, so the (n, dim) matrix reshapes out of the flat buffer
+    with zero per-row Python (this mapper runs over the FULL embedding
+    table — the widest Python boundary in the family).
 
     Bit-identical to the JVM/DuckDB left-fold dot (aggregate/
     list_reduce): accumulate over the DIMS in a Python loop of
@@ -456,9 +527,8 @@ def emb_dup_pairs_rhlsh(
       Σ bucket², buckets ~ n/2^bits per band by construction, each
       ≤ max_bucket by the guard);
     * exact cosine verify on the candidates only (never all pairs), so
-      precision is exactly 1 by construction — also Arrow-batched numpy,
-      with the fold order preserved (see _rh_codes) and rounding left on
-      the JVM side.
+      precision is exactly 1 by construction — the shared exact-cosine
+      Arrow kernel (:func:`exact_cosine`), rounding left on the JVM side.
 
     MULTI-PROBE (``probes``, default auto via :func:`auto_probes`): at
     thresholds too low for exact-bucket recall (τ=0.35 on near-orthogonal
@@ -539,70 +609,9 @@ def rh_pairs_from_codes(
                 F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
             ).alias("vec_b"),
         ).distinct()
-    # Per-vector squared norms fold ONCE on the JVM (r13, guide §4.1/§2.3):
-    # the aggregate/zip_with left fold is bit-identical to the numpy
-    # per-pair fold it replaces (same IEEE adds in the same index order —
-    # the repo-wide fold-parity contract), so attaching two 8-byte
-    # scalars per pair replaces two O(dim) folds per pair in Python.
-    d2 = as_double("embedding")
-    emb_n = emb.select(
-        "vec_id", "embedding", dot(d2, d2).alias("_n2")
-    )
-    j = pairs.join(
-        emb_n.select(
-            F.col("vec_id").alias("vec_a"),
-            F.col("embedding").alias("ea"),
-            F.col("_n2").alias("na"),
-        ),
-        "vec_a",
-    ).join(
-        emb_n.select(
-            F.col("vec_id").alias("vec_b"),
-            F.col("embedding").alias("eb"),
-            F.col("_n2").alias("nb"),
-        ),
-        "vec_b",
-    )
-
-    def gen_cosine(it):
-        # mapInArrow (guide §4.2): the embedding list columns are ONE
-        # contiguous values buffer + offsets per batch — reshape to an
-        # (n, dim) matrix with zero per-row Python, where the previous
-        # mapInPandas form paid a per-row ndarray conversion for every
-        # candidate pair. The dot stays the exact left fold over dims
-        # (bit-identical to SQL aggregate / DuckDB list_reduce).
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            A = list_matrix(cols["ea"], n)
-            B = list_matrix(cols["eb"], n)
-            d = np.zeros(n)
-            for i in range(A.shape[1]):  # exact left fold, as above
-                d = d + A[:, i] * B[:, i]
-            na = np.asarray(cols["na"], dtype=np.float64)
-            nb = np.asarray(cols["nb"], dtype=np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["vec_a"],
-                    cols["vec_b"],
-                    pa.array(d / np.sqrt(na * nb), type=pa.float64()),
-                ],
-                ["vec_a", "vec_b", "cosine_raw"],
-            )
-
-    verified = j.select("vec_a", "vec_b", "ea", "eb", "na", "nb").mapInArrow(
-        gen_cosine, schema="vec_a long, vec_b long, cosine_raw double"
-    )
-    # round on the JVM side: Spark's Round (shortest-decimal-repr HALF_UP)
-    # is what every embedding oracle's _r6 reproduces; np.round is not.
-    return verified.select(
-        "vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine")
-    ).filter(F.col("cosine") >= threshold)
+    # exact verify: norms attach once per row, not per pair (_side)
+    j = pairs.join(_side(emb, "a"), "vec_a").join(_side(emb, "b"), "vec_b")
+    return exact_cosine(j).filter(F.col("cosine") >= threshold)
 
 
 def rhlsh_bucket_stats(
@@ -659,12 +668,7 @@ def rh_bands_for_recall(
     they got)."""
     import math
 
-    theta = math.acos(max(-1.0, min(1.0, threshold)))
-    p = 1.0 - theta / math.pi
-    q = sum(
-        math.comb(bits, j) * p ** (bits - j) * (1.0 - p) ** j
-        for j in range(min(probes, bits) + 1)
-    )
+    q = _band_match(threshold, bits, probes)
     if q <= 0.0 or q >= 1.0:
         return 1
     need = math.log(max(1e-12, 1.0 - target_recall)) / math.log(1.0 - q)
@@ -792,76 +796,16 @@ def rhlsh_recall_stats(
         n, threshold, bands, bits=bits, probes=probes
     )
     mod = max(1, -(-n // max(1, sample_cap)))
-    emb = _emb(spark, sf_dir)
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("vec_id").cast("string"),
-                        F.lit(":rhrecall:v1"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mod
+    h = hex8_long(
+        F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":rhrecall:v1")))
     )
-    d2 = as_double("embedding")
-    sample = emb.filter(h == 0).select(
-        "vec_id", "embedding", dot(d2, d2).alias("_n2")
-    )
-    a = sample.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("_n2").alias("na"),
-    )
-    b = sample.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("_n2").alias("nb"),
-    )
-    cand = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-
-    def gen_cosine(it):
-        # mapInArrow + JVM-precomputed norms — same rewrite as the LSH
-        # verify stage (rh_pairs_from_codes): flat-buffer reshape, exact
-        # left-fold dot, bit-identical values (see that function's note)
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            cols = {
-                name: batch.column(i)
-                for i, name in enumerate(batch.schema.names)
-            }
-            A = list_matrix(cols["ea"], n)
-            B = list_matrix(cols["eb"], n)
-            d = np.zeros(n)
-            for i in range(A.shape[1]):  # exact left fold (see _rh_codes)
-                d = d + A[:, i] * B[:, i]
-            na = np.asarray(cols["na"], dtype=np.float64)
-            nb = np.asarray(cols["nb"], dtype=np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["vec_a"],
-                    cols["vec_b"],
-                    pa.array(d / np.sqrt(na * nb), type=pa.float64()),
-                ],
-                ["vec_a", "vec_b", "cosine_raw"],
-            )
-
+    sample = _emb(spark, sf_dir).filter(h % mod == 0)
     true_pairs = (
-        cand.select("vec_a", "vec_b", "ea", "eb", "na", "nb").mapInArrow(
-            gen_cosine, schema="vec_a long, vec_b long, cosine_raw double"
+        exact_cosine(
+            _side(sample, "a").join(
+                F.broadcast(_side(sample, "b")), F.col("vec_a") < F.col("vec_b")
+            )
         )
-        .select("vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b")
     )
@@ -1020,90 +964,100 @@ KMEANS_SAMPLE_CAP = 65536  # training-sample bound — fixed wrt corpus size
 KMEANS_ITERS = 20
 
 
-def _kmeans_assigned(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> tuple[DataFrame, DataFrame]:
-    """Learned-quantizer internals: (corpus with a ``prediction`` cell
-    column — persisted, and the (cell, centroid) table as a DATAFRAME).
-
-    100 TB shape: the quantizer trains driver-side on a DETERMINISTIC
-    BOUNDED SAMPLE (top-``KMEANS_SAMPLE_CAP`` rows by md5(vec_id) —
-    a TakeOrdered, one pass, no full sort; cap fixed as the corpus
-    grows), and full-corpus assignment is a ZERO-SHUFFLE Arrow-batched
-    numpy argmin against the closure-broadcast centroid matrix —
-    embarrassingly parallel at any scale, vectorized across rows and
-    cells. The n_cells × dim centroid table re-exposes as a
-    broadcastable frame so probe selection stays JVM-side. Memoized, so
-    training + the assignment scan run once per corpus per session."""
-    return memo(
-        spark, sf_dir, ("kmeans", n_cells),
-        lambda: _train_kmeans(spark, sf_dir, n_cells),
-    )
-
-
-def _train_kmeans(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> tuple[DataFrame, DataFrame]:
+def _lloyds_blas(sample, k: int, iters: int = 12):
+    """Deterministic Lloyd's over an in-memory sample (strided
+    hash-order init, first-argmin ties, emptied cells keep their
+    centroid) with the distance computed in BLAS form: argmin ||x-c||² =
+    argmin(c·c − 2 x·C^T), one GEMM per sweep instead of an (n, k, dim)
+    broadcast tensor — the difference between ~16 s and <1 s at the
+    training cap. Distances here exist only to pick argmins; the
+    assignment mappers and the numpy mirrors in tests use this same
+    expression, so assignment is reproducible bit-for-bit."""
     import numpy as np
 
-    emb = _emb(spark, sf_dir)
-    # Arrow transport (toPandas) for the sample — identical doubles,
-    # ~10× less driver deserialize time than a py4j row collect at the
-    # 64k cap (same switch as _ivf_assigned)
-    sample_pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
+    n = len(sample)
+    cents = sample[[(i * n) // k for i in range(k)]].copy()
+    for _ in range(iters):
+        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (sample @ cents.T)
+        lab = d.argmin(axis=1)  # first (lowest) cell on ties
+        # vectorized recenter (per-dim weighted bincount): the per-cell
+        # boolean-mask loop is O(k·n) per sweep — at k=256 it, not the
+        # GEMM, dominated training. Emptied cells keep their centroid.
+        counts = np.bincount(lab, minlength=k).astype(np.float64)
+        sums = np.stack(
+            [
+                np.bincount(lab, weights=sample[:, t], minlength=k)
+                for t in range(sample.shape[1])
+            ],
+            axis=1,
+        )
+        nz = counts > 0
+        cents[nz] = sums[nz] / counts[nz, None]
+    return cents
+
+
+def _train_sample(spark: SparkSession, sf_dir: str, cap: int):
+    """The bounded deterministic training sample as an (n, dim) float64
+    matrix: the first ``cap`` rows in md5(vec_id) order — a TakeOrdered,
+    one pass, no full sort, fixed as the corpus grows — moved to the
+    driver over Arrow."""
+    t = (
+        _emb(spark, sf_dir)
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(KMEANS_SAMPLE_CAP)
-        .toPandas()
+        .limit(cap)
+        .select("embedding")
+        .toArrow()
     )
-    sample = np.array(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf["e"]]
-    )
-    # BLAS distance form (r11 — the 8× study caught the old
-    # (n, k, dim) broadcast tensor paying ~1 GB of temp per sweep as
-    # k grows with √corpus): argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
-    # GEMM per sweep + bincount recenter, the same recipe the IVF and
-    # PQ trainers already use (`llm.pq._lloyds_blas`)
-    from flinkrunner_spark.llm.pq import _lloyds_blas
+    return list_matrix(t.column("embedding").combine_chunks(), t.num_rows)
 
-    cents_np = _lloyds_blas(sample, n_cells, iters=KMEANS_ITERS)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents_np)],
-        "cell int, centroid array<double>",
-    )
-    # full-corpus assignment: Arrow-native numpy argmin against the
-    # broadcast centroid matrix — a zero-shuffle map, vectorized across
-    # rows AND cells (the JVM higher-order-fold equivalent runs
-    # interpreted per element; same trade as _rh_codes). numpy argmin
-    # keeps the FIRST (lowest) cell on exact ties, and the GEMM form
-    # matches the trainer's distance arithmetic term-for-term.
-    # mapInArrow (guide §4.2, r14): the embedding matrix reshapes out of
-    # the list column's flat values buffer and every pass-through column
-    # is the untouched Arrow array — no pandas materialization of the
-    # full corpus frame on either side of the boundary.
-    C = cents_np.copy()
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    ) + ", prediction int"
 
-    def gen_assign(it):
-        import numpy as np
-        import pyarrow as pa
+def _quantizer(spark: SparkSession, sf_dir: str, n_cells: int, iters: int):
+    """The learned coarse quantizer of every cell-based key: (corpus with
+    a ``cell`` column — persisted, the (cell, centroid) frame, the
+    (n_cells, dim) centroid matrix).
 
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            i_emb = batch.schema.names.index("embedding")
-            E = list_matrix(batch.column(i_emb), n)
-            d = (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
-                list(batch.schema.names) + ["prediction"],
-            )
+    100 TB shape: Lloyd's trains on the driver over the bounded sample
+    (``_train_sample``), and full-corpus assignment is a ZERO-SHUFFLE
+    Arrow-batched numpy argmin against the closure-broadcast centroid
+    matrix, vectorized across rows and cells, in the trainer's own
+    distance form (numpy argmin keeps the FIRST cell on exact ties, as
+    training does). The n_cells × dim centroid frame is broadcastable, so
+    probe selection can stay on the JVM. Memoized: training and the
+    assignment scan run once per (corpus, n_cells, iters) per session."""
 
-    assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    return assigned, cents
+    def build():
+        C = _lloyds_blas(
+            _train_sample(spark, sf_dir, KMEANS_SAMPLE_CAP), n_cells, iters
+        )
+        cents = spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+            "cell int, centroid array<double>",
+        )
+        emb = _emb(spark, sf_dir)
+        schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
+        ) + ", cell int"
+        cc = (C * C).sum(axis=1)[None, :]
+
+        def gen_assign(it):
+            import numpy as np
+            import pyarrow as pa
+
+            for batch in it:
+                n = batch.num_rows
+                if not n:
+                    continue
+                E = list_matrix(batch.column("embedding"), n)
+                d = cc - 2.0 * (E @ C.T)
+                yield pa.RecordBatch.from_arrays(
+                    [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
+                    [*batch.schema.names, "cell"],
+                )
+
+        assigned = emb.mapInArrow(gen_assign, schema=schema).persist()
+        return assigned, cents, C
+
+    return memo(spark, sf_dir, ("quantizer", n_cells, iters), build)
 
 
 def emb_knn_ivf_kmeans(
@@ -1131,14 +1085,8 @@ def emb_knn_ivf_kmeans(
     top-k restricted to the probed cells, and the probe genuinely prunes
     the scan — is verified against an independent numpy computation in
     tests/test_algorithms.py."""
-    assigned, cents = _kmeans_assigned(spark, sf_dir, n_cells)
-    q = (
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id") == query_id)
-        .select(F.col("embedding").alias("qv"))
-    )
-    if q.isEmpty():  # a typo'd id must error, not return an empty top-k
-        raise ValueError(f"unknown query vec_id {query_id}")
+    q = _query(_emb(spark, sf_dir), query_id)
+    assigned, cents, _ = _quantizer(spark, sf_dir, n_cells, KMEANS_ITERS)
     probe = (
         cents.crossJoin(F.broadcast(q))
         .select(
@@ -1147,11 +1095,11 @@ def emb_knn_ivf_kmeans(
         )
         .orderBy(F.col("ccos").desc(), F.col("cell"))
         .limit(nprobe)
-        .select(F.col("cell").alias("prediction"))
+        .select("cell")
     )
     cos = cosine(as_double("embedding"), as_double("qv"))
     return (
-        assigned.join(F.broadcast(probe), "prediction")
+        assigned.join(F.broadcast(probe), "cell")
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != query_id)
         .select("vec_id", F.round(cos, 6).alias("cosine"))
@@ -1322,39 +1270,22 @@ def emb_semantic_dedup(
     assigned = docs_cluster_assign(spark, sf_dir).select(
         "vec_id", "assigned_label"
     )
-    emb = _emb(spark, sf_dir)
-    normed = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .join(assigned, "vec_id")
-        .withColumn("nrm", dot(F.col("e"), F.col("e")))
+    frame = _emb(spark, sf_dir).select("vec_id", "embedding").join(
+        assigned, "vec_id"
     )
-    a = normed.select(
-        F.col("assigned_label").alias("c"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = normed.select(
-        F.col("assigned_label").alias("c"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    dropped = (
-        a.join(b, ["c"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(F.round(cos, 6) >= threshold)
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "assigned_label",
-            F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("keep"),
-        )
+    return _keep_flags(assigned, cell_pairs(frame, "assigned_label", threshold))
+
+
+def _keep_flags(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The SemDeDup keep-lowest tail: every (vec_id, cluster) row of
+    ``ids`` with ``keep`` false iff a lower-id vector of its cluster is a
+    near-dup — the ``vec_b`` side of a :func:`cell_pairs` row."""
+    dropped = pairs.select(F.col("vec_b").alias("vec_id")).distinct()
+    return ids.join(
+        dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left"
+    ).select(
+        *ids.columns,
+        F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("keep"),
     )
 
 
@@ -1377,40 +1308,9 @@ def emb_semantic_dedup_kmeans(
     Lloyd's run, kept set pairwise dup-free per cell, every drop
     justified by a lower-id near-dup — is verified in
     tests/test_llm_round5.py."""
-    assigned, _ = _kmeans_assigned(spark, sf_dir, n_cells)
-    normed = assigned.select(
-        "vec_id",
-        F.col("prediction").alias("cell"),
-        as_double("embedding").alias("e"),
-    ).withColumn("nrm", dot(F.col("e"), F.col("e")))
-    a = normed.select(
-        F.col("cell"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = normed.select(
-        F.col("cell"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    dropped = (
-        a.join(b, ["cell"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(F.round(cos, 6) >= threshold)
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        normed.select("vec_id", "cell")
-        .join(dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("keep"),
-        )
+    assigned, _, _ = _quantizer(spark, sf_dir, n_cells, KMEANS_ITERS)
+    return _keep_flags(
+        assigned.select("vec_id", "cell"), cell_pairs(assigned, "cell", threshold)
     )
 
 
@@ -1444,79 +1344,6 @@ def ivf_cells(
     return max(min_cells, min(max_cells, 1 << math.ceil(math.log2(root))))
 
 
-def _ivf_assigned(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int, "object"]:
-    """Corpus-scaled IVF internals: (corpus with a ``cell`` column —
-    persisted, the (cell, centroid) table, n_cells, centroid np matrix).
-
-    Same 100 TB shape as ``_kmeans_assigned`` — deterministic bounded
-    training sample (top-``KMEANS_SAMPLE_CAP`` by md5(vec_id)), Lloyd's
-    on the driver, zero-shuffle Arrow-batched full-corpus assignment —
-    but the cell count derives from the corpus size (``ivf_cells``:
-    ≈√n) and training/assignment use the BLAS distance form
-    (``llm.pq._lloyds_blas``: argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
-    GEMM per sweep) so a 65536-row sample trains against thousands of
-    cells in seconds. First-argmin tie behavior matches the trainer and
-    the numpy mirror in tests bit-for-bit. Memoized: the learned coarse
-    quantizer is trained once per corpus per session."""
-    return memo(spark, sf_dir, ("ivf",), lambda: _train_ivf(spark, sf_dir))
-
-
-def _train_ivf(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int, "object"]:
-    import numpy as np
-
-    from flinkrunner_spark.llm.pq import _lloyds_blas
-
-    emb = _emb(spark, sf_dir)
-    n_cells = ivf_cells(emb.count())
-    # Arrow transport for the training sample (toPandas), not the py4j
-    # row collect — same doubles, ~10× less driver deserialize time on
-    # a 64k×64 sample
-    sample_pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(KMEANS_SAMPLE_CAP)
-        .toPandas()
-    )
-    sample = np.array(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf["e"]]
-    )
-    cents_np = _lloyds_blas(sample, n_cells)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents_np)],
-        "cell int, centroid array<double>",
-    )
-    C = cents_np.copy()
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    ) + ", cell int"
-
-    def gen_assign(it):
-        # mapInArrow (guide §4.2, r14): same zero-pandas pass-through
-        # rewrite as _kmeans_assigned's assignment stage
-        import numpy as np
-        import pyarrow as pa
-
-        cc = (C * C).sum(axis=1)[None, :]
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            i_emb = batch.schema.names.index("embedding")
-            E = list_matrix(batch.column(i_emb), n)
-            d = cc - 2.0 * (E @ C.T)  # same BLAS form as the trainer
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
-                list(batch.schema.names) + ["cell"],
-            )
-
-    assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    return assigned, cents, n_cells, cents_np
-
-
 def emb_knn_join(
     spark: SparkSession,
     sf_dir: str,
@@ -1534,7 +1361,7 @@ def emb_knn_join(
     sub-linear. Plan shape at 100 TB (r7 verdict item 1b — replaces the
     label-cell plan whose fixed cell count made candidate work quadratic
     and whose forced probe broadcast grew linearly):
-    * cells come from ``_ivf_assigned``: K = ``ivf_cells(n)`` ≈ √n
+    * cells come from ``_quantizer``: K = ``ivf_cells(n)`` ≈ √n
       (FAISS guideline), so cell size ~√n and per-query candidate work
       is nprobe·√n, not nprobe·n/constant;
     * probe selection scans the BROADCAST centroid table (≤ 33 MB by
@@ -1563,18 +1390,17 @@ def emb_knn_join(
     in the numpy mirror test (tests/test_algorithms.py). The
     exactly-oracled companion is :func:`emb_knn_join_label` (constant
     query block over deterministic label cells)."""
-    assigned, _cents, n_cells, C = _ivf_assigned(spark, sf_dir)
+    assigned, _, C = _quantizer(
+        spark, sf_dir, ivf_cells(_emb_count(spark, sf_dir)), 12
+    )
     queries = _emb(spark, sf_dir).filter(
         F.col("vec_id") % stride == 0
     ).select(F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("qv"))
 
     def gen_probe(it):
-        # mapInArrow (guide §4.2, r14): the query matrix reshapes out of
-        # the qv list column's flat buffer; the nprobe-way row expansion
-        # is one vectorized take() per column instead of a per-query
-        # pandas frame + concat. A stable argsort on -ccos is exactly the
-        # old per-row lexsort((cells_idx, -ccos[i])): equal cosines keep
-        # the original (ascending cell id) order.
+        # the nprobe-way row expansion is one vectorized take() per
+        # column; a stable argsort on -ccos keeps equal cosines in
+        # ascending cell-id order
         import numpy as np
         import pyarrow as pa
 
@@ -1608,9 +1434,6 @@ def emb_knn_join(
     )
 
     def gen_score(it):
-        # mapInArrow (guide §4.2, r14): both matrices reshape out of the
-        # list columns' flat buffers — zero per-row Python over the
-        # candidate set, the family's hot loop
         import numpy as np
         import pyarrow as pa
 
@@ -1682,84 +1505,46 @@ def emb_knn_join_label(
     candidate set and ranking reproduce bit-identically in DuckDB.
 
     Probe ranking stays a JVM fold (query_cap × n_labels cosines —
-    trivial); candidate SCORING is Arrow-batched numpy with the fold
-    order preserved (the ``_rh_codes`` exact-left-fold trick: accumulate
-    over dims in a vectorized loop, bit-identical to the SQL
-    list_reduce) and rounds on the JVM side — the oracle is unchanged,
-    only the interpreter is gone from the ~cap·nprobe·cellsize hot
-    loop."""
-    emb = _emb(spark, sf_dir)
-    h = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":knnq:v1")))
-    queries = (
-        emb.filter(F.col("vec_id") % stride == 0)
-        .orderBy(h, "vec_id")
-        .limit(query_cap)
-        .select(F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("qv"))
-    )
-    cents = _centroids(spark, sf_dir)
+    trivial); candidate SCORING is the shared exact-cosine Arrow kernel
+    (:func:`exact_cosine`) with both norms folded once per row on the
+    JVM and rounding on the JVM side — the oracle is unchanged, only the
+    interpreter is gone from the ~cap·nprobe·cellsize hot loop."""
     from pyspark.sql import Window
 
-    ccos = F.round(cosine(F.col("centroid"), as_double("qv")), 6)
+    emb = _emb(spark, sf_dir)
+    h = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":knnq:v1")))
+    queries = _side(
+        emb.filter(F.col("vec_id") % stride == 0)
+        .orderBy(h, "vec_id")
+        .limit(query_cap),
+        "a",
+    )
+    ccos = F.round(cosine(F.col("centroid"), as_double("ea")), 6)
     probe = (
-        queries.crossJoin(F.broadcast(cents))
-        .select("q_vec_id", "qv", "label", ccos.alias("ccos"))
+        queries.crossJoin(F.broadcast(_centroids(spark, sf_dir)))
+        .select("vec_a", "ea", "na", "label", ccos.alias("ccos"))
         .withColumn(
             "crk",
             F.row_number().over(
-                Window.partitionBy("q_vec_id").orderBy(
+                Window.partitionBy("vec_a").orderBy(
                     F.col("ccos").desc(), F.col("label")
                 )
             ),
         )
         .filter(F.col("crk") <= nprobe)
-        .select("q_vec_id", "qv", "label")
+        .select("vec_a", "ea", "na", "label")
     )
-    def gen_fold_cosine(it):
-        # mapInArrow (guide §4.2, r14): matrices reshape out of the list
-        # columns' flat buffers; the dot and both norms stay the exact
-        # left fold over dims, bit-identical to the SQL/DuckDB oracle
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            cols = {
-                name: batch.column(i)
-                for i, name in enumerate(batch.schema.names)
-            }
-            A = list_matrix(cols["embedding"], n)
-            B = list_matrix(cols["qv"], n)
-            d = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(A.shape[1]):  # exact left folds (see _rh_codes)
-                d = d + A[:, i] * B[:, i]
-                na = na + A[:, i] * A[:, i]
-                nb = nb + B[:, i] * B[:, i]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["q_vec_id"],
-                    cols["vec_id"],
-                    pa.array(d / np.sqrt(na * nb), type=pa.float64()),
-                ],
-                ["q_vec_id", "vec_id", "cosine_raw"],
-            )
-
-    scored = (
-        emb.join(F.broadcast(probe), "label")  # bounded: ≤ query_cap·nprobe rows
-        .filter(F.col("vec_id") != F.col("q_vec_id"))
-        .select("q_vec_id", "qv", "vec_id", "embedding")
-        .mapInArrow(
-            gen_fold_cosine,
-            schema="q_vec_id long, vec_id long, cosine_raw double",
-        )
+    pairs = (
+        _side(emb, "b", "label")
+        .join(F.broadcast(probe), "label")  # bounded: ≤ query_cap·nprobe rows
+        .filter(F.col("vec_a") != F.col("vec_b"))
     )
-    # round on the JVM side: Spark's Round matches the oracle's _r6
     return (
-        scored.select(
-            "q_vec_id", "vec_id", F.round("cosine_raw", 6).alias("cosine")
+        exact_cosine(pairs)
+        .select(
+            F.col("vec_a").alias("q_vec_id"),
+            F.col("vec_b").alias("vec_id"),
+            "cosine",
         )
         .withColumn(
             "rk",
@@ -1807,9 +1592,7 @@ def emb_knn_ivf(
             ).alias("centroid")
         )
     )
-    q = emb.filter(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("qv")
-    )
+    q = _query(emb, query_id)
     probe = (
         cells.crossJoin(F.broadcast(q))
         .select(
@@ -1861,22 +1644,8 @@ def emb_decontaminate(
     cosine ties on the LOWEST eval id (struct-max on (rounded cosine,
     -id)) so the answer is deterministic cross-engine."""
     emb = _emb(spark, sf_dir)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("vec_id").cast("string"), F.lit(":eval:v1"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % EVAL_VEC_BUCKETS
-    )
     h = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":eval:v1")))
-    tagged = emb.withColumn("bkt", bucket)
+    tagged = emb.withColumn("bkt", hex8_long(h) % EVAL_VEC_BUCKETS)
     ev = (
         tagged.filter(F.col("bkt") == 0)
         .orderBy(h, "vec_id")  # deterministic constant-size eval block

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.util.hashing import hex8_long
 from flinkrunner_spark.util.memo import memo, pin
 
 CMS_DEPTH = 4  # hash rows (error probability ~ e^-D)
@@ -64,9 +65,7 @@ def cms_bucket(tok: Column, row: int, width: int = CMS_WIDTH) -> Column:
     md5 hex digits of ``token:cms:<row>`` mod width — the md5-derived
     hash discipline every cross-engine-exact op here uses."""
     h = F.md5(F.concat(tok, F.lit(f":cms:{row}")))
-    return (
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width
-    ).cast("int")
+    return (hex8_long(h) % width).cast("int")
 
 
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,6 +4,7 @@ HLL relative-error contract)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from flinkrunner_spark.algorithms.hll import estimate, update_registers
 from flinkrunner_spark.algorithms.sbf import StableBloomFilter
@@ -114,16 +115,19 @@ def test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard(spark):
     release_caches(sf)
 
 
-def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
+def _assert_ivf_kmeans_exact_within_probed_cells(spark, sf):
     """The learned-quantizer IVF must return EXACTLY the cosine top-k of
     the probed cells (computed independently in numpy), and the probe
     must genuinely prune the scan."""
     import numpy as np
 
-    from flinkrunner_spark.llm.similarity import _kmeans_assigned, emb_knn_ivf_kmeans
+    from flinkrunner_spark.llm.similarity import (
+        KMEANS_ITERS,
+        _quantizer,
+        emb_knn_ivf_kmeans,
+    )
 
-    sf = "/root/testdata/sf0.01"
-    assigned, cents_df = _kmeans_assigned(spark, sf, n_cells=16)
+    assigned, cents_df, _ = _quantizer(spark, sf, 16, KMEANS_ITERS)
     qv = (
         spark.read.parquet(f"{sf}/embeddings.parquet")
         .filter("vec_id = 0")
@@ -136,7 +140,7 @@ def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
     C = np.array([r["centroid"] for r in crows], dtype=np.float64)
     ccos = (C @ qn) / (np.sqrt((C * C).sum(axis=1)) * np.sqrt(qn @ qn))
     cells = [int(c) for c in np.lexsort((np.arange(len(C)), -ccos))[:4]]
-    cand = assigned.filter(assigned["prediction"].isin(cells)).filter(
+    cand = assigned.filter(assigned["cell"].isin(cells)).filter(
         assigned["vec_id"] != 0
     )
     rows = cand.select("vec_id", "embedding").collect()
@@ -158,6 +162,28 @@ def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
     ]
     assert [g[0] for g in got] == [e[0] for e in expected]
     assert all(abs(g[1] - e[1]) < 1e-9 for g, e in zip(got, expected))
+
+
+def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
+    _assert_ivf_kmeans_exact_within_probed_cells(spark, "/root/testdata/sf0.01")
+
+
+def test_emb_knn_ivf_kmeans_exact_on_small_corpus(spark):
+    """Default-lane sibling of the gated sf0.01 exactness test."""
+    _assert_ivf_kmeans_exact_within_probed_cells(spark, "/root/testdata/sf0.001")
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["emb_knn", "emb_knn_ivf", "emb_knn_ivf_kmeans", "emb_knn_sq8", "emb_knn_pq"],
+)
+def test_single_query_knn_rejects_unknown_query_id(spark, key):
+    """An unknown ``query_id`` fails loudly in every single-query k-NN
+    key instead of returning an empty top-k."""
+    import __spark_entry__ as E
+
+    with pytest.raises(ValueError, match="unknown query vec_id -1"):
+        E.queries()[key](spark, "/root/testdata/sf0.001", query_id=-1)
 
 
 def test_dup_pairs_blas_tiled_on_skewed_label(spark):
@@ -419,7 +445,7 @@ def test_emb_knn_join_matches_numpy_mirror(spark):
     import numpy as np
 
     from flinkrunner_spark.llm import similarity
-    from flinkrunner_spark.llm.pq import _lloyds_blas
+    from flinkrunner_spark.llm.similarity import _lloyds_blas
 
     sf = "/root/testdata/sf0.001"
     release_caches(sf)

@@ -110,9 +110,7 @@ def test_semantic_dedup_kmeans_matches_numpy_mirror(spark):
     sample = E[hkeys[: similarity.KMEANS_SAMPLE_CAP]]
     # the trainer and assigner both use the BLAS distance form — the
     # mirror re-derives through the identical expression (bit-for-bit)
-    from flinkrunner_spark.llm.pq import _lloyds_blas
-
-    cents = _lloyds_blas(sample, 16, iters=similarity.KMEANS_ITERS)
+    cents = similarity._lloyds_blas(sample, 16, iters=similarity.KMEANS_ITERS)
     d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (E @ cents.T)
     cell = d.argmin(axis=1)
     got_cell = dict(zip(out["vec_id"], out["cell"]))

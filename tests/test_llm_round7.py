@@ -144,7 +144,7 @@ def test_emb_knn_pq_matches_numpy_mirror(spark):
     sub = S.shape[1] // m
     C = np.stack(
         [
-            pq._lloyds_blas(S[:, j * sub : (j + 1) * sub].copy(), kc)
+            similarity._lloyds_blas(S[:, j * sub : (j + 1) * sub].copy(), kc)
             for j in range(m)
         ]
     )
